@@ -43,8 +43,9 @@ def test_bench_isolates_query_failures(tmp_path, monkeypatch):
     monkeypatch.setattr(bench, "get_spark", keep_alive)
     bench.main()
     # stdout contract (VERDICT r4 item 3): every line is parseable JSON;
-    # the LAST line is a compact clip-proof summary, the one before it the
-    # full result dict, preceded by one terse {"q","s"} line per query.
+    # the LAST line is a compact clip-proof summary; before it come one
+    # terse {"q","s"} line per query, the full result dict, and the
+    # per-query timings again in {"qchunk","of","t"} lines.
     lines = [json.loads(s) for s in printed]
     compact = lines[-1]
     assert compact["metric"] == "sum_median_sec_all_queries"
@@ -52,14 +53,17 @@ def test_bench_isolates_query_failures(tmp_path, monkeypatch):
     assert compact["n_queries"] == 3
     assert compact["n_err"] == 1
     assert len(json.dumps(compact)) < 400
-    out = lines[-2]
+    (out,) = [d for d in lines[:-1] if "queries" in d and "metric" in d]
     assert out["queries"]["broken"] == "ERR"
     assert "NameError" in out["errors"]["broken"]
     assert isinstance(out["queries"]["ok_one"], float)
     assert isinstance(out["queries"]["ok_two"], float)
     assert out["value"] > 0
-    perq = {d["q"]: d["s"] for d in lines[:-2] if "q" in d}
+    perq = {d["q"]: d["s"] for d in lines if "q" in d}
     assert perq == out["queries"]
+    chunks = [d for d in lines if "qchunk" in d]
+    assert chunks and all(d["of"] == len(chunks) for d in chunks)
+    assert {n: t for d in chunks for n, t in d["t"].items()} == out["queries"]
 
 
 def test_load_anchors_parses_baseline_table():

@@ -12,38 +12,9 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from us_dot_flights_lakehouse_spark.functions.vectors import lit_doubles
-from us_dot_flights_lakehouse_spark.queries.sim_q import _kcenter_driver
-
-
-def _kcenter_distributed(spark, rows, k):
-    """Verbatim replica of sim_kcenter_diversity's over-cap k-scan loop
-    (the plan-side shape the driver path must match bit-for-bit)."""
-    corpus = spark.createDataFrame(rows, "vec_id long, v array<double>").cache()
-
-    def sqdist_to(center):
-        return F.aggregate(
-            F.zip_with(
-                F.col("v"), lit_doubles(center), lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        )
-
-    seed_row = corpus.orderBy("vec_id").limit(1).collect()[0]
-    selected = [(0, int(seed_row["vec_id"]), 0.0)]
-    centers = [list(seed_row["v"])]
-    mind = F.lit(float("inf"))
-    for r in range(1, k):
-        mind = F.least(mind, sqdist_to(centers[-1]))
-        cand = corpus.filter(
-            ~F.col("vec_id").isin([s[1] for s in selected])
-        ).select("vec_id", "v", mind.alias("d"))
-        top = cand.orderBy(F.desc("d"), F.asc("vec_id")).limit(1).collect()[0]
-        selected.append((r, int(top["vec_id"]), float(top["d"])))
-        centers.append(list(top["v"]))
-    corpus.unpersist()
-    return selected
+from conftest import patch_defining_module
+from us_dot_flights_lakehouse_spark.queries import sim_q
+from us_dot_flights_lakehouse_spark.queries.sim_q import _kcenter_driver, _kcenter_scan
 
 
 def test_kcenter_driver_equals_distributed(spark):
@@ -66,8 +37,68 @@ def test_kcenter_driver_equals_distributed(spark):
         got = _kcenter_driver(tbl, k)
         assert got is not None
         rows = [(int(i), [float(x) for x in row]) for i, row in zip(ids, V)]
-        want = _kcenter_distributed(spark, rows, k)
+        want = _kcenter_scan(
+            spark.createDataFrame(rows, "vec_id long, v array<double>"), k
+        )
         assert got == want, f"trial {trial}: {got} != {want}"
+
+
+def test_kcenter_forced_cap_matches_driver_path(spark, monkeypatch):
+    """Over KCENTER_DRIVER_MAX_ROWS the query takes the k-scan path; it
+    must return the same rows as the driver path on the same corpus."""
+    rng = np.random.default_rng(3)
+    rows = [
+        (int(i), [float(x) for x in rng.standard_normal(4)])
+        for i in rng.permutation(500)[:20]
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    for name in ("read_table", "read_corpus"):
+        patch_defining_module(
+            monkeypatch, sim_q.sim_kcenter_diversity, name, lambda s, d, n: emb
+        )
+    scans = []
+    monkeypatch.setattr(
+        sim_q, "_kcenter_scan", lambda c, k: scans.append(k) or _kcenter_scan(c, k)
+    )
+    driver = sim_q.sim_kcenter_diversity(spark, "x").collect()
+    assert scans == []
+    monkeypatch.setattr(sim_q, "KCENTER_DRIVER_MAX_ROWS", 0)
+    forced = sim_q.sim_kcenter_diversity(spark, "x").collect()
+    assert scans == [sim_q.KCENTER_K]
+    assert forced == driver
+
+
+def test_w8_bucket_shorter_than_24_hours(spark, monkeypatch):
+    """w8's kernel on buckets with fewer than 24 gap-filled hours: the
+    lag gather must stay in range, and every window is the user prefix
+    (one user per bucket here: user_id mod 64 differs)."""
+    import datetime as dt
+
+    from us_dot_flights_lakehouse_spark.queries import window_q
+
+    h0 = dt.datetime(2024, 1, 1, 5)
+    events = spark.createDataFrame(
+        [
+            (1, h0, 1.0),
+            (1, h0 + dt.timedelta(hours=2), 3.0),
+            (2, h0, 2.5),
+        ],
+        "user_id long, ts timestamp, value double",
+    )
+    patch_defining_module(
+        monkeypatch, window_q.w8_rolling_anomaly, "read_table",
+        lambda s, d, n: events,
+    )
+    got = sorted(
+        (r["user_id"], r["hour"], r["total_value"], r["mean_24h"])
+        for r in window_q.w8_rolling_anomaly(spark, "x").collect()
+    )
+    assert [g[0] for g in got] == [1, 1, 1, 2]
+    assert [g[1] for g in got] == [
+        h0, h0 + dt.timedelta(hours=1), h0 + dt.timedelta(hours=2), h0
+    ]
+    assert [g[2] for g in got] == [1.0, 0.0, 3.0, 2.5]
+    assert [g[3] for g in got] == [1.0, 0.5, 4.0 / 3, 2.5]
 
 
 def test_kcenter_driver_fallback_preconditions():

@@ -641,3 +641,35 @@ def test_schema_memo_reinfers_on_inplace_part_rewrite(spark, tmp_path):
 
     second = readers._table_schema(spark, str(tbl_dir))
     assert [f.name for f in second.fields] == ["b"]
+
+
+def test_scan_parts_memo_reprobes_on_inplace_part_rewrite(spark, tmp_path, monkeypatch):
+    """The scan-partition memo shares the schema memo's stat stamp: an
+    IN-PLACE rewrite of a part file inside a directory table must run
+    the ``scan_partitions`` probe again, while an unchanged table keeps
+    hitting the memo."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from us_dot_flights_lakehouse_spark.sources import readers
+
+    sf_dir = tmp_path
+    tbl_dir = sf_dir / "t.parquet"
+    tbl_dir.mkdir()
+    part = tbl_dir / "part-00000.parquet"
+    pq.write_table(pa.table({"a": [1, 2, 3]}), part)
+
+    calls = []
+    real_probe = readers.scan_partitions
+    monkeypatch.setattr(
+        readers, "scan_partitions", lambda df: calls.append(1) or real_probe(df)
+    )
+    readers.read_corpus(spark, str(sf_dir), "t")
+    readers.read_corpus(spark, str(sf_dir), "t")
+    assert len(calls) == 1  # memo hit on an unchanged table
+
+    pq.write_table(pa.table({"a": [4, 5, 6, 7]}), part)
+    st = part.stat()
+    os.utime(part, ns=(st.st_mtime_ns + 1_000_000, st.st_mtime_ns + 1_000_000))
+    readers.read_corpus(spark, str(sf_dir), "t")
+    assert len(calls) == 2

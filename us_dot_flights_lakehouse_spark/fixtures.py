@@ -20,14 +20,20 @@ import os
 
 
 def source_fingerprint(sf_dir: str, *tables: str) -> str:
-    """Cheap content key for one or more source parquet tables:
-    md5 over (name, size, mtime_ns) of each file. Stat-only — never
-    reads data — so safe to call on every query invocation."""
+    """Cheap content key for one or more source parquet tables: md5
+    over each table's name and stat stamp (the reader memos' stamp, so a
+    part file rewritten in place inside a directory table changes it
+    too). Stat-only — never reads data — so safe to call on every query
+    invocation."""
+    from us_dot_flights_lakehouse_spark.sources.readers import _stat_stamp
+
     h = hashlib.md5()
     for t in tables:
         p = os.path.join(sf_dir, f"{t}.parquet")
-        st = os.stat(p)
-        h.update(f"{t}:{st.st_size}:{st.st_mtime_ns};".encode())
+        stamp = _stat_stamp(p)
+        if stamp is None:
+            raise FileNotFoundError(p)
+        h.update(f"{t}:{stamp};".encode())
     return h.hexdigest()[:10]
 
 

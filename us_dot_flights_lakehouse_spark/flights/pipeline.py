@@ -37,6 +37,7 @@ from us_dot_flights_lakehouse_spark.flights.star import (
     build_dim_time,
     build_fact_flights,
 )
+from us_dot_flights_lakehouse_spark.operators.physical import cached
 from us_dot_flights_lakehouse_spark.quality.checks import (
     DataDocsCollector,
     QualityGateError,
@@ -173,8 +174,7 @@ _MART_NAMES = (
 def run_dimensions(spark: SparkSession, paths: LakehousePaths) -> dict[str, DataFrame]:
     """Dims off ONE cached silver read (reference build_all_dimensions.py:46-58),
     each gated fail-closed on PK uniqueness before its write."""
-    silver = spark.read.parquet(paths.silver).cache()
-    try:
+    with cached(spark.read.parquet(paths.silver)) as silver:
         bounds = silver.agg(
             F.min("FLIGHT_DATE").alias("lo"), F.max("FLIGHT_DATE").alias("hi")
         ).collect()[0]
@@ -189,8 +189,6 @@ def run_dimensions(spark: SparkSession, paths: LakehousePaths) -> dict[str, Data
         for name, dim in dims.items():
             suites[name].validate(dim, fail_closed=True)  # PK uniqueness gates
             write_partitioned(dim, paths.gold(name))
-    finally:
-        silver.unpersist()
     return {name: spark.read.parquet(paths.gold(name)) for name in _DIM_NAMES}
 
 
@@ -198,8 +196,7 @@ def run_fact(spark: SparkSession, paths: LakehousePaths) -> DataFrame:
     """Fact build reading the PUBLISHED dims back from gold (like the
     reference's separate fact_flights spark-submit job): broadcast star
     join + warn-only FK-null probe + keyed repartition write."""
-    silver = spark.read.parquet(paths.silver).cache()
-    try:
+    with cached(spark.read.parquet(paths.silver)) as silver:
         fact = build_fact_flights(
             silver,
             dim_date=spark.read.parquet(paths.gold("dim_date")),
@@ -213,24 +210,19 @@ def run_fact(spark: SparkSession, paths: LakehousePaths) -> DataFrame:
             fact, paths.gold("fact_flights"), partition_by=["DATE_KEY"],
             repartition_rows=n_rows,
         )
-    finally:
-        silver.unpersist()
     return spark.read.parquet(paths.gold("fact_flights"))
 
 
 def run_marts(spark: SparkSession, paths: LakehousePaths) -> dict[str, DataFrame]:
     """Aggregate marts off one cached silver scan (reference
     build_all_aggregates.py)."""
-    silver = spark.read.parquet(paths.silver).cache()
-    try:
+    with cached(spark.read.parquet(paths.silver)) as silver:
         for name, mart in (
             ("daily_airline_performance", daily_airline_performance(silver)),
             ("daily_airport_performance", daily_airport_performance(silver)),
             ("route_performance", route_performance(silver)),
         ):
             write_partitioned(mart, paths.gold(name))
-    finally:
-        silver.unpersist()
     return {name: spark.read.parquet(paths.gold(name)) for name in _MART_NAMES}
 
 

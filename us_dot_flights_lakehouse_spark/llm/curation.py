@@ -24,6 +24,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -35,6 +37,7 @@ from us_dot_flights_lakehouse_spark.functions.text import (
     shingles,
     tokenize,
 )
+from us_dot_flights_lakehouse_spark.operators.physical import bounded_arrow, cached
 
 
 def pack_sequences(
@@ -339,31 +342,17 @@ def shard_assign(
 DRIVER_CC_MAX_EDGES = 2_000_000
 
 
-def _dup_clusters_driver(
-    nodes: DataFrame, edges: DataFrame, id_col: str
-) -> DataFrame:
-    """Bounded driver-side connected components over the (already
-    cap-checked) symmetric edge list: numpy min-label pointer jumping —
-    each pass takes the min label across every edge in one vectorized
-    `minimum.at`, then halves label-chain depth with `lab = lab[lab]`;
-    converges in O(log n) passes. Node ids are compacted through
-    `np.unique` (sorted), so index order == id order and the fixpoint
-    label is exactly the component's MIN id — the distributed loop's
-    contract. Labels cover every node in the edge set (as the loop's
-    edge_nodes does); `nodes` not in any pair come back as singletons."""
+def _driver_cc_labels(spark, a_ids, b_ids, id_datatype) -> DataFrame:
+    """Bounded driver-side connected components over a collected one-way
+    edge list: numpy min-label pointer jumping — each pass takes the min
+    label across every edge in one vectorized `minimum.at`, then halves
+    label-chain depth with `lab = lab[lab]`; converges in O(log n)
+    passes. Node ids are compacted through `np.unique` (sorted), so index
+    order == id order and the fixpoint label is exactly the component's
+    MIN id — the distributed loop's contract. Returns (node, cluster_id)
+    for every node in the edge set as a local relation."""
     import numpy as np
-
-    id_field = edges.schema["a"]
-    pdf = edges.toPandas()
-    a_ids, b_ids = pdf["a"].to_numpy(), pdf["b"].to_numpy()
-    return _driver_cc_from_arrays(nodes, a_ids, b_ids, id_field.dataType, id_col)
-
-
-def _driver_cc_from_arrays(nodes, a_ids, b_ids, id_datatype, id_col: str):
-    """Numpy core of ``_dup_clusters_driver``, reusable with edge id
-    arrays that were collected by any bounded means (toPandas or the
-    fused ``limit(cap+1).toArrow()`` path in ``dup_clusters``)."""
-    import numpy as np
+    import pandas as pd
 
     u = np.unique(np.concatenate([a_ids, b_ids]))
     ia = np.searchsorted(u, a_ids)
@@ -376,24 +365,60 @@ def _driver_cc_from_arrays(nodes, a_ids, b_ids, id_datatype, id_col: str):
         lab = np.minimum(lab, lab[lab])
         if np.array_equal(lab, old):
             break
-    spark = nodes.sparkSession
     schema = StructType(
         [
             StructField("node", id_datatype, False),
             StructField("cluster_id", id_datatype, False),
         ]
     )
-    import pandas as pd
-
-    labels = spark.createDataFrame(
+    return spark.createDataFrame(
         pd.DataFrame({"node": u, "cluster_id": u[lab]}), schema
     )
-    singletons = (
-        nodes.select(F.col(id_col).alias("node"))
-        .join(labels.select("node"), "node", "left_anti")
+
+
+def _min_label_loop(edges: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
+    """Distributed min-label propagation over the (materialized)
+    symmetric edge list; returns checkpointed (node, cluster_id) for
+    every node in the edge set. Iterates ONLY over nodes that appear in
+    some pair: the near-dup graph is a tiny fraction of the corpus, and
+    singletons cannot change label — at scale this shrinks every round
+    from corpus-sized to pair-graph-sized."""
+    # size the ITERATION's parallelism to the pair graph, not the session
+    # default — the rounds shuffle only edges+labels, and spreading a few
+    # thousand edges over the corpus-sized partition count makes every
+    # round pay full task-scheduling overhead for empty partitions.
+    # Large graphs keep full parallelism (≈200K edges per partition).
+    sc = edges.sparkSession.sparkContext
+    parts = max(1, min(sc.defaultParallelism, n_edges // 200_000 + 1))
+    edges = edges.coalesce(parts)
+    labels = (
+        edges.select(F.col("a").alias("node"))
+        .distinct()
         .select("node", F.col("node").alias("cluster_id"))
+        .localCheckpoint()
     )
-    return labels.unionByName(singletons)
+    prev_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
+    for _ in range(max_iter):
+        neigh = (
+            edges.join(labels, edges["b"] == labels["node"])
+            .groupBy("a")
+            .agg(F.min("cluster_id").alias("neigh_min"))
+        )
+        labels = (
+            labels.join(neigh, labels["node"] == neigh["a"], "left")
+            .select(
+                "node",
+                F.least(
+                    F.col("cluster_id"), F.coalesce(F.col("neigh_min"), F.col("cluster_id"))
+                ).alias("cluster_id"),
+            )
+            .localCheckpoint()
+        )
+        cur_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
+        if cur_sum == prev_sum:  # monotone non-increasing -> fixpoint
+            break
+        prev_sum = cur_sum
+    return labels
 
 
 def dup_clusters(
@@ -427,95 +452,54 @@ def dup_clusters(
         return _dup_clusters_two_star(nodes, pairs, id_col, a_col, b_col, max_iter)
     if variant != "min_label":
         raise ValueError(f"unknown variant: {variant!r}")
+    if driver_cc_max is None:
+        driver_cc_max = DRIVER_CC_MAX_EDGES
     one_way = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
     # r13 (guide §1.2 "the distributed algorithm"): below the cap, resolve
     # components ON THE DRIVER in one bounded action instead of iterating
     # 2 Spark jobs per propagation round (join+checkpoint, convergence
     # probe) — for the few-hundred-pair graphs dedup actually produces,
     # the loop was pure scheduling overhead (~2 s per call at sf0.1; four
-    # query paths call this). r14: cap check and collection FUSE into one
-    # ``limit(cap+1)`` Arrow action (the quantiles pattern) — one Spark
-    # job instead of a count job plus a collect job, and no cache
-    # round-trip at all on the driver path. ≤DRIVER_CC_MAX_EDGES
-    # two-column rows cross via Arrow; vectorized numpy pointer-jumping
-    # resolves labels as a broadcast-able local relation. Above the cap —
-    # the 100 TB pair-graph regime — the distributed min-label loop below
-    # runs unchanged (the limit probe reads only a partition prefix
-    # before overflowing). Same result by construction: both compute the
-    # min node id per connected component (property-tested for equality).
-    if driver_cc_max is None:
-        driver_cc_max = DRIVER_CC_MAX_EDGES
-    # the probe collects the ONE-WAY pair list (the numpy CC updates both
-    # endpoint directions per edge, so it never needs the symmetric
-    # union — which would evaluate the expensive upstream pair subtree
-    # twice in the probe job) and it reads from a CACHE so an over-cap
-    # overflow wastes nothing: the partitions the limit touched are
-    # already materialized for the distributed path's symmetric union
-    # below (the quantiles-ADVICE lesson — a bounded probe must not cost
-    # the 100 TB path an extra pass)
-    pair_cap = driver_cc_max // 2  # cap counts symmetric edges
-    one_way = one_way.cache()
-    if driver_cc_max >= 0:
-        tbl = one_way.limit(pair_cap + 1).toArrow()
-        if tbl.num_rows <= pair_cap:
-            labels = _driver_cc_from_arrays(
-                nodes,
+    # query paths call this). Above the cap — the 100 TB pair-graph
+    # regime — the distributed min-label loop runs. Same result by
+    # construction: both compute the min node id per connected component
+    # (property-tested for equality).
+    #
+    # The probe collects the ONE-WAY pair list (the numpy CC updates both
+    # endpoint directions per edge, so it never needs the symmetric union
+    # — which would evaluate the expensive upstream pair subtree twice in
+    # the probe job) and reads it from a CACHE, so an over-cap overflow
+    # wastes nothing: the partitions the limit touched are already
+    # materialized for the symmetric union, whose two branches both read
+    # the cache — the upstream pair pipeline runs exactly once. The
+    # one-way cache is released as soon as the symmetric edges are
+    # materialized; the edge cache lives until the loop ends.
+    with ExitStack() as edges_scope:
+        with cached(one_way):
+            tbl = bounded_arrow(one_way, driver_cc_max // 2)  # cap counts symmetric edges
+            if tbl is None:
+                edges = edges_scope.enter_context(
+                    cached(
+                        one_way.union(
+                            one_way.select(F.col("b").alias("a"), F.col("a").alias("b"))
+                        )
+                    )
+                )
+                n_edges = edges.count()
+        if tbl is not None:
+            labels = _driver_cc_labels(
+                nodes.sparkSession,
                 tbl.column("a").to_numpy(zero_copy_only=False),
                 tbl.column("b").to_numpy(zero_copy_only=False),
                 one_way.schema["a"].dataType,
-                id_col,
             )
-            one_way.unpersist()
-            return labels
-    # distributed path: both symmetric branches read the one-way CACHE,
-    # so the upstream pair pipeline still runs exactly once. Size the
-    # ITERATION's parallelism to the pair graph, not the session
-    # default — the rounds below shuffle only edges+labels, and
-    # spreading a few thousand edges over the corpus-sized partition
-    # count makes every round pay full task-scheduling overhead for
-    # empty partitions. Large graphs keep full parallelism (≈200K edges
-    # per partition).
-    edges = one_way.union(
-        one_way.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).cache()
-    n_edges = edges.count()
-    one_way.unpersist()
-    sc = nodes.sparkSession.sparkContext
-    parts = max(1, min(sc.defaultParallelism, n_edges // 200_000 + 1))
-    edges = edges.coalesce(parts)
-    # iterate ONLY over nodes that appear in some pair: the near-dup graph
-    # is a tiny fraction of the corpus, and singletons cannot change label
-    # — at scale this shrinks every propagation round from corpus-sized to
-    # pair-graph-sized
-    edge_nodes = edges.select(F.col("a").alias("node")).distinct()
-    labels = edge_nodes.select(
-        "node", F.col("node").alias("cluster_id")
-    ).localCheckpoint()
-    prev_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-    for _ in range(max_iter):
-        neigh = (
-            edges.join(labels, edges["b"] == labels["node"])
-            .groupBy("a")
-            .agg(F.min("cluster_id").alias("neigh_min"))
-        )
-        labels = (
-            labels.join(neigh, labels["node"] == neigh["a"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("neigh_min"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint()
-        )
-        cur_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-        if cur_sum == prev_sum:  # monotone non-increasing -> fixpoint
-            break
-        prev_sum = cur_sum
-    edges.unpersist()
+        else:
+            labels = _min_label_loop(edges, n_edges, max_iter)
+    # labels cover every node of the pair graph; every other node of
+    # `nodes` is its own cluster
     singletons = (
         nodes.select(F.col(id_col).alias("node"))
-        .join(edge_nodes, "node", "left_anti")
+        .join(labels.select("node"), "node", "left_anti")
         .select("node", F.col("node").alias("cluster_id"))
     )
     return labels.unionByName(singletons)

@@ -13,21 +13,38 @@ from pyspark.sql import functions as F
 
 
 @contextmanager
-def cached(df: DataFrame, materialize: bool = True):
+def cached(df: DataFrame):
     """X1: scoped cache — the reference caches shared inputs and manually
     unpersists after the consumers run (build_fact_flights.py:95-99);
-    a context manager makes the release un-forgettable:
+    a context manager makes the release un-forgettable, including when a
+    consumer raises. The cache fills on the first action inside the
+    scope (no extra materializing job). Builders cache only through it:
 
         with cached(silver) as s:
             dims = [build_dim_airline(s), build_dim_airport(s)]
     """
     df.cache()
-    if materialize:
-        df.count()
     try:
         yield df
     finally:
         df.unpersist()
+
+
+def bounded_arrow(df: DataFrame, max_rows: int):
+    """Bounded driver collect: ``df`` as a ``pyarrow.Table`` when it has
+    at most ``max_rows`` rows, else None ("keep the distributed shape").
+
+    One ``limit(max_rows + 1).toArrow()`` action both checks the cap and
+    collects: the limit bounds the driver transfer by construction, and
+    the one extra row is enough to detect overflow — no separate
+    ``count()`` job. Over the cap the limit stops after a partition
+    prefix when ``df`` is a scan, a cache or a checkpoint; above a full
+    aggregate it still runs that aggregate, so a caller whose input may
+    be huge gates on its own size estimate first
+    (``quantiles.collect_value_histogram``). Row caps stay per caller:
+    row widths differ, so the byte bound behind a cap does too."""
+    tbl = df.limit(max_rows + 1).toArrow()
+    return None if tbl.num_rows > max_rows else tbl
 
 
 def partition_histogram(df: DataFrame) -> list[int]:

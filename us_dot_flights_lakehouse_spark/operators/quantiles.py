@@ -53,10 +53,12 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from us_dot_flights_lakehouse_spark.operators.physical import bounded_arrow
+
 #: Collected-histogram row cap for driver-side rank selection. Below it
 #: the histogram collects via Arrow (3 narrow columns — ≤ ~64 MB) and
 #: selection is a vectorized driver action; above it callers keep their
-#: distributed shape. Same posture as curation.DRIVER_CC_MAX_EDGES.
+#: distributed shape.
 DRIVER_HIST_MAX_ROWS = 4_000_000
 
 #: Estimated-input pre-gate for the histogram path (ADVICE r13): over
@@ -99,8 +101,8 @@ def collect_value_histogram(
     as a ``pyarrow.Table`` with columns ``group_cols + value_cols +
     ['__cnt']``, or None when it exceeds ``cap`` rows or a value column
     carries genuine (non-NULL) NaN — both meaning "keep the plan-side
-    shape". ``limit(cap + 1)`` bounds the driver transfer by
-    construction; the aggregate itself is the one full pass over ``df``.
+    shape". ``bounded_arrow`` bounds the driver transfer; the aggregate
+    itself is the one full pass over ``df``.
     """
     import numpy as np
 
@@ -112,8 +114,8 @@ def collect_value_histogram(
     hist = df.groupBy(*[F.col(c) for c in group_cols + value_cols]).agg(
         F.count("*").alias("__cnt")
     )
-    tbl = hist.limit(cap + 1).toArrow()
-    if tbl.num_rows > cap:
+    tbl = bounded_arrow(hist, cap)
+    if tbl is None:
         return None
     for c in value_cols:
         col = tbl.column(c)

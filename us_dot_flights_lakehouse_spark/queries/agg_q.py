@@ -17,6 +17,7 @@ from us_dot_flights_lakehouse_spark.operators.aggregates import (
     rollup_agg,
 )
 from us_dot_flights_lakehouse_spark.operators.generators import date_range_df
+from us_dot_flights_lakehouse_spark.operators.physical import bounded_arrow
 from us_dot_flights_lakehouse_spark.operators.quantiles import (
     collect_value_histogram,
     histogram_groups,
@@ -1672,23 +1673,21 @@ def a30_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _a30_driver_select(spark: SparkSession, per_price: DataFrame):
     """a30's cap-bounded driver path: collect the (flag, price, cents)
-    histogram (``limit(cap+1)`` bounds the transfer), resolve the lower
-    weighted median per flag with an int64 cumulative, or return None
-    over the cap. NULL weights (a flag whose every quantity is NULL)
+    histogram with ``bounded_arrow``, resolve the lower weighted median
+    per flag with an int64 cumulative, or return None over the cap. NULL weights (a flag whose every quantity is NULL)
     keep w NULL → cents NULL → treated as 0 weight, exactly as the
     decimal cumulative sums them."""
     import numpy as np
 
     from us_dot_flights_lakehouse_spark.operators import quantiles as _q
 
-    cap = _q.DRIVER_HIST_MAX_ROWS
     pp = per_price.select(
         "l_returnflag",
         "l_extendedprice",
         (F.col("w") * 100).cast("long").alias("w_cents"),
     )
-    tbl = pp.limit(cap + 1).toArrow()
-    if tbl.num_rows > cap:
+    tbl = bounded_arrow(pp, _q.DRIVER_HIST_MAX_ROWS)
+    if tbl is None:
         return None
     import pandas as pd
 

@@ -17,6 +17,7 @@ from us_dot_flights_lakehouse_spark.operators.aggregates import (
     rollup_agg,
 )
 from us_dot_flights_lakehouse_spark.operators.generators import date_range_df
+from us_dot_flights_lakehouse_spark.operators.physical import bounded_arrow
 from us_dot_flights_lakehouse_spark.operators.joins import (
     asof_join,
     broadcast_star_join,
@@ -1232,19 +1233,18 @@ LPA_ROUNDS = 3
 #: Edge cap for resolving the LPA rounds on the driver (g4): below it the
 #: bounded collect + numpy kernel replaces 2 scheduler-bound Spark jobs
 #: per round; above it the distributed bulk-synchronous loop runs
-#: unchanged. Same posture as curation.DRIVER_CC_MAX_EDGES.
+#: unchanged.
 DRIVER_LPA_MAX_EDGES = 2_000_000
 
 
-def _g4_driver_lpa(spark: SparkSession, edges: DataFrame) -> DataFrame:
-    """g4's cap-bounded driver path: collect the (a, b) edge list (the
-    caller checked the cap), run LPA_ROUNDS synchronous rounds with the
-    exact plan-side vote/argmax semantics — votes are every neighbor's
-    label plus the node's own, winner by (count desc, label asc) — and
-    return (p_partkey, community, community_size) as a local relation."""
+def _g4_driver_lpa(spark: SparkSession, tbl) -> DataFrame:
+    """g4's cap-bounded driver path: over the collected (a, b) edge
+    table, run LPA_ROUNDS synchronous rounds with the exact plan-side
+    vote/argmax semantics — votes are every neighbor's label plus the
+    node's own, winner by (count desc, label asc) — and return
+    (p_partkey, community, community_size) as a local relation."""
     import numpy as np
 
-    tbl = edges.toArrow()
     a = tbl.column("a").to_numpy(zero_copy_only=False).astype("int64")
     b = tbl.column("b").to_numpy(zero_copy_only=False).astype("int64")
     nodes = np.unique(np.concatenate([a, b]))
@@ -1303,17 +1303,18 @@ def g4_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one per-node argmax — all edge-scale equi-shuffles on the shared
     checkpointed edge list; label state is one row per node.
 
-    r13 (guide §5 bounded driver actions — the dup_clusters posture):
-    below DRIVER_LPA_MAX_EDGES the rounds run vectorized on the driver
-    over the already-checkpointed edge list (the distributed loop paid
+    r13 (guide §5 bounded driver actions): below DRIVER_LPA_MAX_EDGES
+    one ``bounded_arrow`` collect of the already-checkpointed edge list
+    feeds rounds vectorized on the driver (the distributed loop paid
     2 scheduler-bound Spark jobs per round for a few-thousand-edge
     sampled graph); the argmax replicates max(struct(c, -lbl)) exactly
     — (count desc, label asc) — so labels are identical by construction
     (property-tested against the distributed loop). Above the cap the
     bulk-synchronous loop below runs unchanged."""
     edges = _copurchase_edges(read_table(spark, sf_dir, "lineitem"))
-    if edges.count() <= DRIVER_LPA_MAX_EDGES:
-        return _g4_driver_lpa(spark, edges)
+    tbl = bounded_arrow(edges, DRIVER_LPA_MAX_EDGES)
+    if tbl is not None:
+        return _g4_driver_lpa(spark, tbl)
     nbr = edges.select(
         F.col("a").alias("v"), F.col("b").alias("u")
     ).unionAll(edges.select(F.col("b").alias("v"), F.col("a").alias("u")))

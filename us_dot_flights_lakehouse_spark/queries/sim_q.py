@@ -31,6 +31,7 @@ from us_dot_flights_lakehouse_spark.functions.text import (
     shingles,
     tokenize,
 )
+from us_dot_flights_lakehouse_spark.operators.physical import bounded_arrow, cached
 from us_dot_flights_lakehouse_spark.sources.readers import read_corpus, read_table
 
 from us_dot_flights_lakehouse_spark.queries.llm_shared import (
@@ -1123,10 +1124,9 @@ def _kcenter_select(path: str, k: int):
 
 #: row cap for the driver-side k-center greedy: 64-dim float64 vectors
 #: cost ~520 B/row, so the cap bounds the Arrow transfer to ~130 MB.
-#: ``limit(cap+1)`` underneath is a CollectLimit — at 100 TB it reads a
-#: partition prefix, detects overflow and leaves the k-scan path to do
-#: the real work (no wasted full pass; same posture as
-#: operators/quantiles.py + curation.DRIVER_CC_MAX_EDGES).
+#: ``bounded_arrow`` over the plain scan reads a partition prefix at
+#: 100 TB, detects overflow and leaves the k-scan path to do the real
+#: work (no wasted full pass).
 KCENTER_DRIVER_MAX_ROWS = 250_000
 
 
@@ -1216,41 +1216,36 @@ def sim_kcenter_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     farthest-batch passes grow an O(k·log) candidate pool, driver-local
     Gonzalez refine; unit-verified against this greedy on planted
     clusters)."""
-    # r14 (guide §5 bounded driver actions — the g4/quantiles posture):
-    # below the row cap the whole greedy runs driver-side off ONE
-    # CollectLimit-bounded Arrow transfer instead of KCENTER_K scans +
-    # per-round collects (8 Spark jobs of pure scheduling at any local
-    # SF). The probe reads the PLAIN scan (no read_corpus repartition —
-    # a limit above an exchange would run the full shuffle map stage
-    # before collecting). Bit-equality of the float update order is
-    # property-tested; any precondition miss (overflow, NULL/NaN/ragged
-    # vectors) falls back to the k-scan path below.
-    tbl = (
-        read_table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        )
-        .limit(KCENTER_DRIVER_MAX_ROWS + 1)
-        .toArrow()
+    # r14 (guide §5 bounded driver actions): below the row cap the whole
+    # greedy runs driver-side off ONE bounded Arrow transfer instead of
+    # KCENTER_K scans + per-round collects (8 Spark jobs of pure
+    # scheduling at any local SF). The probe reads the PLAIN scan (no
+    # read_corpus repartition — a limit above an exchange would run the
+    # full shuffle map stage before collecting). Bit-equality of the
+    # float update order is property-tested; any precondition miss
+    # (overflow, NULL/NaN/ragged vectors) falls back to the k-scan path.
+    v = F.transform("embedding", lambda x: x.cast("double")).alias("v")
+    tbl = bounded_arrow(
+        read_table(spark, sf_dir, "embeddings").select("vec_id", v),
+        KCENTER_DRIVER_MAX_ROWS,
     )
-    selected = (
-        _kcenter_driver(tbl, KCENTER_K)
-        if tbl.num_rows <= KCENTER_DRIVER_MAX_ROWS
-        else None
-    )
-    if selected is not None:
-        return spark.createDataFrame(
-            selected, "round int, vec_id long, min_dist double"
+    selected = _kcenter_driver(tbl, KCENTER_K) if tbl is not None else None
+    if selected is None:
+        selected = _kcenter_scan(
+            read_corpus(spark, sf_dir, "embeddings").select("vec_id", v),
+            KCENTER_K,
         )
+    return spark.createDataFrame(
+        selected, "round int, vec_id long, min_dist double"
+    )
 
-    emb = read_corpus(spark, sf_dir, "embeddings")
-    # the k rounds each rescan the corpus — cache it for the duration of
-    # the selection (k reads of one materialization), release after
-    corpus = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    ).cache()
+
+def _kcenter_scan(corpus: DataFrame, k: int) -> list:
+    """The plan-side greedy over ``corpus`` (vec_id, v array<double>):
+    one distributed argmax per round (distance expressions over literal
+    already-selected centers, TakeOrdered(1)). Returns the same
+    ``[(round, vec_id, min_dist)]`` list as ``_kcenter_driver``. The k
+    rounds each rescan the corpus, so it is cached for the selection."""
     from us_dot_flights_lakehouse_spark.functions.vectors import lit_doubles
 
     def sqdist_to(center):
@@ -1260,22 +1255,20 @@ def sim_kcenter_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, d: acc + d,
         )
 
-    seed_row = corpus.orderBy("vec_id").limit(1).collect()[0]
-    selected = [(0, int(seed_row["vec_id"]), 0.0)]
-    centers = [list(seed_row["v"])]
-    mind = F.lit(float("inf"))
-    for r in range(1, KCENTER_K):
-        mind = F.least(mind, sqdist_to(centers[-1]))
-        cand = corpus.filter(
-            ~F.col("vec_id").isin([s[1] for s in selected])
-        ).select("vec_id", "v", mind.alias("d"))
-        top = cand.orderBy(F.desc("d"), F.asc("vec_id")).limit(1).collect()[0]
-        selected.append((r, int(top["vec_id"]), float(top["d"])))
-        centers.append(list(top["v"]))
-    corpus.unpersist()
-    return spark.createDataFrame(
-        selected, "round int, vec_id long, min_dist double"
-    )
+    with cached(corpus):
+        seed_row = corpus.orderBy("vec_id").limit(1).collect()[0]
+        selected = [(0, int(seed_row["vec_id"]), 0.0)]
+        centers = [list(seed_row["v"])]
+        mind = F.lit(float("inf"))
+        for r in range(1, k):
+            mind = F.least(mind, sqdist_to(centers[-1]))
+            cand = corpus.filter(
+                ~F.col("vec_id").isin([s[1] for s in selected])
+            ).select("vec_id", "v", mind.alias("d"))
+            top = cand.orderBy(F.desc("d"), F.asc("vec_id")).limit(1).collect()[0]
+            selected.append((r, int(top["vec_id"]), float(top["d"])))
+            centers.append(list(top["v"]))
+    return selected
 
 
 def _kcenter_oracle() -> str:

@@ -415,8 +415,11 @@ def w8_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         # prefix totals just BEFORE each user's first row
         p_c = c[ostart] - dense[ostart]
         p_sq = csq[ostart] - dense[ostart] * dense[ostart]
-        lag_c = np.where(t >= 24, c[np.arange(total) - 24], p_c[seg_id])
-        lag_sq = np.where(t >= 24, csq[np.arange(total) - 24], p_sq[seg_id])
+        # np.where evaluates both branches for every row: clamp the
+        # gather index so a bucket under 24 gap-filled hours stays in range
+        back = np.maximum(np.arange(total) - 24, 0)
+        lag_c = np.where(t >= 24, c[back], p_c[seg_id])
+        lag_sq = np.where(t >= 24, csq[back], p_sq[seg_id])
         s_c = c - lag_c
         sq_c = csq - lag_sq
         # checked precondition (ADVICE r5): the int64 prefix sums may wrap
