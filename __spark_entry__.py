@@ -14,7 +14,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from us_dot_flights_lakehouse_spark import queries as _registry
-from us_dot_flights_lakehouse_spark.queries.relational import (
+from us_dot_flights_lakehouse_spark.queries.agg_q import (
     daily_segment_performance,
 )
 

@@ -36,15 +36,3 @@ def duck():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMALL}/{t}.parquet'")
     yield con
     con.close()
-
-
-def patch_defining_module(monkeypatch, fn, name: str, value) -> None:
-    """Monkeypatch ``name`` in the module where ``fn`` was DEFINED, not in
-    an aggregator that merely re-exports it. Required since the round-13
-    mechanical split of queries/llm.py and queries/relational.py into
-    family modules: a function's globals (read_table, helpers) resolve in
-    its family module, so patching the aggregator's attribute is a no-op
-    for the function under test. Split-proof: follows fn.__module__."""
-    import sys
-
-    monkeypatch.setattr(sys.modules[fn.__module__], name, value)

@@ -573,6 +573,28 @@ def test_dhash_image_contract(spark):
         dhash_image(big).collect()
 
 
+def test_phash_clusters_null_dhash_is_singleton(spark):
+    """mm_phash_dedup's cluster tail: equal hashes cluster under their
+    smallest id; each NULL-dhash row stays its own non-dup cluster, even
+    when several rows share the NULL."""
+    from us_dot_flights_lakehouse_spark.queries.mm_q import phash_clusters
+
+    hashed = spark.createDataFrame(
+        [(5, 7), (2, 7), (9, 8), (4, None), (1, None)], "id long, dhash long"
+    )
+    got = {
+        r["doc_id"]: (r["dhash"], r["cluster_min"], r["is_dup"])
+        for r in phash_clusters(hashed).collect()
+    }
+    assert got == {
+        2: (7, 2, False),
+        5: (7, 2, True),
+        9: (8, 9, False),
+        1: (None, 1, False),
+        4: (None, 4, False),
+    }
+
+
 def test_frame_motion_null_contract(spark):
     """frame_motion emits a null-metric row for invalid blobs and exact
     sums for a known two-frame AVI — with NO exchange in the plan (the

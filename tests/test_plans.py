@@ -11,9 +11,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from us_dot_flights_lakehouse_spark.queries.relational import (
+from us_dot_flights_lakehouse_spark.queries.agg_q import (
     a5_topk_parts,
     daily_segment_performance,
+)
+from us_dot_flights_lakehouse_spark.queries.join_q import (
     j2_star_fact_build,
     j6_semi_high_value_customers,
 )
@@ -93,7 +95,7 @@ def test_hot_path_stays_in_codegen(spark):
 
 
 def test_conditional_cleaning_has_no_python_udf(spark):
-    from us_dot_flights_lakehouse_spark.queries.relational import p4_conditional_cleaning
+    from us_dot_flights_lakehouse_spark.queries.funcs_q import p4_conditional_cleaning
 
     plan = _plan(p4_conditional_cleaning(spark, SF), mode="simple")
     assert "BatchEvalPython" not in plan  # row-at-a-time Python would kill scan speed
@@ -101,9 +103,7 @@ def test_conditional_cleaning_has_no_python_udf(spark):
 
 
 def test_multiway_join_broadcasts_all_dims(spark):
-    from us_dot_flights_lakehouse_spark.queries.relational import (
-        j10_regional_revenue,
-    )
+    from us_dot_flights_lakehouse_spark.queries.join_q import j10_regional_revenue
 
     plan = (
         j10_regional_revenue(spark, SF)
@@ -171,7 +171,7 @@ def test_partitioned_read_prunes_partitions(spark, tmp_path_factory):
 def test_rag_pipeline_joins_on_buckets_not_cartesian(spark):
     """The RAG retrieval join must key on the LSH bucket — a cartesian
     (all-chunks x probe-chunks) plan would defeat the index entirely."""
-    from us_dot_flights_lakehouse_spark.queries.llm import tp_rag_pipeline
+    from us_dot_flights_lakehouse_spark.queries.tokpack_q import tp_rag_pipeline
 
     plan = _plan(tp_rag_pipeline(spark, SF))
     assert "CartesianProduct" not in plan
@@ -182,9 +182,7 @@ def test_rolling_anomaly_has_no_sliding_frame(spark):
     """w8 computes 24-row sums as running-total differences; a
     ROWS BETWEEN 23 PRECEDING frame in the plan means the O(frame)-per-row
     regression crept back (24.6 s vs 8.1 s at sf0.1)."""
-    from us_dot_flights_lakehouse_spark.queries.relational import (
-        w8_rolling_anomaly,
-    )
+    from us_dot_flights_lakehouse_spark.queries.window_q import w8_rolling_anomaly
 
     plan = _plan(w8_rolling_anomaly(spark, SF))
     assert "23 PRECEDING" not in plan.upper()
@@ -194,7 +192,7 @@ def test_bpe_pair_counts_aggregates_partially(spark):
     """Both aggregations (word counts, pair counts) must plan
     partial+final — map-side combine is what keeps the corpus-sized
     first shuffle small."""
-    from us_dot_flights_lakehouse_spark.queries.llm import tp_bpe_pair_counts
+    from us_dot_flights_lakehouse_spark.queries.tokpack_q import tp_bpe_pair_counts
 
     plan = _plan(tp_bpe_pair_counts(spark, SF))
     assert plan.count("HashAggregate") >= 4  # 2 aggs x (partial + final)
@@ -206,7 +204,7 @@ def test_feature_hash_has_single_exchange(spark):
     doc_id, which satisfies BOTH downstream groupings ((doc, bucket) ⊇
     doc) — exactly one Exchange in the plan. A second exchange means the
     partitioning contract broke and the aggregates re-shuffle."""
-    from us_dot_flights_lakehouse_spark.queries.llm import sim_feature_hash
+    from us_dot_flights_lakehouse_spark.queries.sim_q import sim_feature_hash
 
     plan = _plan(sim_feature_hash(spark, SF), mode="simple")
     assert plan.count("Exchange") == 1, plan
@@ -218,9 +216,7 @@ def test_equidepth_histogram_has_no_global_sort(spark, monkeypatch):
     aggregate) — no Sort, no Window, no second scan. Over the cap the
     previous broadcast-boundaries shape must come back: a global Sort or
     an ntile window funnel would be the 100 TB anti-pattern either way."""
-    from us_dot_flights_lakehouse_spark.queries.relational import (
-        a20_equidepth_histogram,
-    )
+    from us_dot_flights_lakehouse_spark.queries.agg_q import a20_equidepth_histogram
 
     plan = _plan(a20_equidepth_histogram(spark, SF))
     assert "Sort" not in plan and "Window" not in plan
@@ -240,16 +236,14 @@ def test_copurchase_pairs_have_no_lineitem_self_join(spark):
     """a22 expands pairs inside the per-order basket array — the plan
     must contain exactly the lineitem scans the aggregate needs (basket
     collect + item counts), never a lineitem⋈lineitem join."""
-    from us_dot_flights_lakehouse_spark.queries.relational import (
-        a22_copurchase_lift,
-    )
+    from us_dot_flights_lakehouse_spark.queries.agg_q import a22_copurchase_lift
 
     plan = _plan(a22_copurchase_lift(spark, SF))
     assert "SortMergeJoin" not in plan  # pair join sides are aggregates
 
 
 def test_winsorize_bounds_join_is_broadcast(spark):
-    from us_dot_flights_lakehouse_spark.queries.relational import p8_winsorize
+    from us_dot_flights_lakehouse_spark.queries.funcs_q import p8_winsorize
 
     plan = _plan(p8_winsorize(spark, SF))
     assert "BroadcastHashJoin" in plan
@@ -260,7 +254,7 @@ def test_prefix_clusters_single_fingerprint_shuffle(spark):
     """dd_prefix_clusters: one md5 per doc, one groupBy on the 16-byte
     key, join back — no Python, no extra exchanges beyond the two
     aggregate/join hash exchanges."""
-    from us_dot_flights_lakehouse_spark.queries.llm import dd_prefix_clusters
+    from us_dot_flights_lakehouse_spark.queries.dedup_q import dd_prefix_clusters
 
     plan = _plan(dd_prefix_clusters(spark, SF))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -270,9 +264,7 @@ def test_prefix_clusters_single_fingerprint_shuffle(spark):
 def test_ewma_is_grouped_map_not_hof_fold(spark):
     """w12 must fold in the Arrow grouped-map kernel (FlatMapGroupsInPandas),
     not an interpreted HOF that copies the accumulator array per step."""
-    from us_dot_flights_lakehouse_spark.queries.relational import (
-        w12_ewma_smoothing,
-    )
+    from us_dot_flights_lakehouse_spark.queries.window_q import w12_ewma_smoothing
 
     plan = _plan(w12_ewma_smoothing(spark, SF))
     assert "FlatMapGroupsInPandas" in plan
@@ -282,7 +274,7 @@ def test_ewma_is_grouped_map_not_hof_fold(spark):
 def test_dsir_token_join_aggregates_partially(spark):
     """tp_dsir_weights: the word-count aggregate must be partial+final
     (map-side combine) so the token shuffle carries counts, not tokens."""
-    from us_dot_flights_lakehouse_spark.queries.llm import tp_dsir_weights
+    from us_dot_flights_lakehouse_spark.queries.tokpack_q import tp_dsir_weights
 
     plan = _plan(tp_dsir_weights(spark, SF))
     assert "partial_count" in plan or "HashAggregate" in plan
@@ -390,9 +382,7 @@ def test_advised_mart_layout_exchange_sits_above_final_agg(spark):
     repartition at the advisor's count), sitting ABOVE a partial+final
     aggregate — an exchange below the aggregate would ship raw rows
     unaggregated."""
-    from us_dot_flights_lakehouse_spark.queries.relational import (
-        a42_advised_mart_layout,
-    )
+    from us_dot_flights_lakehouse_spark.queries.sketch_q import a42_advised_mart_layout
 
     df = a42_advised_mart_layout(spark, SF)
     n = df.select("advised_partitions").first()["advised_partitions"]

@@ -156,7 +156,7 @@ def test_char_gini_fold_matches_counter_spec(spark, texts):
     from collections import Counter
 
     from pyspark.sql import functions as F
-    from us_dot_flights_lakehouse_spark.queries.llm import ts_char_gini
+    from us_dot_flights_lakehouse_spark.queries.text_q import ts_char_gini
 
     # drive the same expression tree through a literal frame
     df = spark.createDataFrame(
@@ -165,9 +165,8 @@ def test_char_gini_fold_matches_counter_spec(spark, texts):
     import sys as _sys
 
     # rebuild the query's projection against this frame (same code path:
-    # feed via a patched read_corpus in the DEFINING module — since the
-    # round-13 split, the aggregator's attribute is not the one the
-    # function's globals resolve)
+    # feed via a patched read_corpus in the DEFINING module, whose
+    # globals the function resolves)
     mod = _sys.modules[ts_char_gini.__module__]
     orig = mod.read_corpus
     mod.read_corpus = lambda _s, _d, _t: df
@@ -217,13 +216,13 @@ def test_ewma_kernel_matches_python_recurrence(spark, rows):
     df = spark.createDataFrame(data, "user_id long, ts timestamp, value double")
     import sys as _sys
 
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
+    from us_dot_flights_lakehouse_spark.queries import window_q
 
-    mod = _sys.modules[rel.w12_ewma_smoothing.__module__]
+    mod = _sys.modules[window_q.w12_ewma_smoothing.__module__]
     orig = mod.read_table
     mod.read_table = lambda _s, _d, _t: df
     try:
-        out = rel.w12_ewma_smoothing(spark, "ignored").collect()
+        out = window_q.w12_ewma_smoothing(spark, "ignored").collect()
     finally:
         mod.read_table = orig
     got = {(r["user_id"], r["hour"]): r["ewma"] for r in out}

@@ -47,6 +47,41 @@ def test_priority_names_all_resolve():
     assert not dangling, f"_PRIORITY names with no catalog query: {sorted(dangling)}"
 
 
+def test_name_registered_by_two_modules_raises(monkeypatch):
+    """A name that two modules both register must raise, not let the
+    later module silently shadow the earlier one."""
+    import types
+
+    from us_dot_flights_lakehouse_spark.queries import agg_q
+
+    twin = types.ModuleType("twin_q")
+    twin.QUERIES = {"a3_global_summary": agg_q.a3_global_summary}
+    twin.ORACLES = {"a3_global_summary": agg_q.ORACLES["a3_global_summary"]}
+    monkeypatch.setattr(registry, "_MODULES", registry._MODULES + (twin,))
+    with pytest.raises(ValueError, match="a3_global_summary.*agg_q.*twin_q"):
+        registry.queries()
+    with pytest.raises(ValueError, match="a3_global_summary.*agg_q.*twin_q"):
+        registry.oracle_sql()
+
+
+@pytest.mark.parametrize("module", registry._MODULES, ids=lambda m: m.__name__)
+def test_module_owns_exactly_its_entries(module):
+    """Each module's QUERIES and ORACLES carry the same names, and every
+    builder it registers is defined in it."""
+    assert set(module.QUERIES) == set(module.ORACLES)
+    foreign = {n for n, fn in module.QUERIES.items() if fn.__module__ != module.__name__}
+    assert not foreign, f"{module.__name__} registers builders it does not define: {foreign}"
+
+
+def test_catalog_head_is_priority():
+    """The driver samples the catalog head: it must be _PRIORITY, in
+    order, and fit in the sampled prefix."""
+    from us_dot_flights_lakehouse_spark.queries import _DRIVER_HEAD, _PRIORITY
+
+    assert len(_PRIORITY) <= _DRIVER_HEAD
+    assert list(QUERIES)[: len(_PRIORITY)] == list(_PRIORITY)
+
+
 def test_no_query_returns_complex_columns(spark, sf_small):
     """The correctness driver canonicalizes results with a pandas
     sort_values, which throws ``TypeError: unhashable type`` on array /

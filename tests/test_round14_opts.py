@@ -12,7 +12,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from conftest import patch_defining_module
 from us_dot_flights_lakehouse_spark.queries import sim_q
 from us_dot_flights_lakehouse_spark.queries.sim_q import _kcenter_driver, _kcenter_scan
 
@@ -53,8 +52,8 @@ def test_kcenter_forced_cap_matches_driver_path(spark, monkeypatch):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     for name in ("read_table", "read_corpus"):
-        patch_defining_module(
-            monkeypatch, sim_q.sim_kcenter_diversity, name, lambda s, d, n: emb
+        monkeypatch.setattr(
+            sim_q, name, lambda s, d, n: emb
         )
     scans = []
     monkeypatch.setattr(
@@ -85,8 +84,8 @@ def test_w8_bucket_shorter_than_24_hours(spark, monkeypatch):
         ],
         "user_id long, ts timestamp, value double",
     )
-    patch_defining_module(
-        monkeypatch, window_q.w8_rolling_anomaly, "read_table",
+    monkeypatch.setattr(
+        window_q, "read_table",
         lambda s, d, n: events,
     )
     got = sorted(

@@ -16,8 +16,7 @@ from pyspark.sql import functions as F
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "tools"))
 
-from us_dot_flights_lakehouse_spark.queries import llm as qllm  # noqa: E402
-from us_dot_flights_lakehouse_spark.queries import relational as qrel  # noqa: E402
+from us_dot_flights_lakehouse_spark.queries import agg_q, llm_shared  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -26,7 +25,7 @@ from us_dot_flights_lakehouse_spark.queries import relational as qrel  # noqa: E
 
 
 def test_a31_ks_drift_nondegenerate(spark, sf_small):
-    row = qrel.a31_ks_drift(spark, sf_small).collect()[0]
+    row = agg_q.a31_ks_drift(spark, sf_small).collect()[0]
     assert row["n1"] > 0, "pre-cutoff sample empty: KS_CUTOFF_DATE degenerate"
     assert row["n2"] > 0, "post-cutoff sample empty: KS_CUTOFF_DATE degenerate"
     assert row["ks_stat"] is not None
@@ -36,9 +35,9 @@ def test_a31_ks_drift_nondegenerate(spark, sf_small):
 
 def test_a31_cutoff_splits_orders(duck):
     n1, n2 = duck.execute(
-        f"""SELECT CAST(sum(CASE WHEN o_orderdate < DATE '{qrel.KS_CUTOFF_DATE}'
+        f"""SELECT CAST(sum(CASE WHEN o_orderdate < DATE '{agg_q.KS_CUTOFF_DATE}'
                    THEN 1 ELSE 0 END) AS BIGINT),
-                   CAST(sum(CASE WHEN o_orderdate >= DATE '{qrel.KS_CUTOFF_DATE}'
+                   CAST(sum(CASE WHEN o_orderdate >= DATE '{agg_q.KS_CUTOFF_DATE}'
                    THEN 1 ELSE 0 END) AS BIGINT) FROM orders"""
     ).fetchone()
     assert n1 > 0 and n2 > 0
@@ -136,12 +135,12 @@ _RAW_SPLITS = [
     (
         "KS_CUTOFF_DATE",
         "orders",
-        f"o_orderdate < DATE '{qrel.KS_CUTOFF_DATE}'",
+        f"o_orderdate < DATE '{agg_q.KS_CUTOFF_DATE}'",
     ),
     (
         "INCR_HISTORY_CUTOFF",
         "documents",
-        f"doc_id < {qllm.INCR_HISTORY_CUTOFF}",
+        f"doc_id < {llm_shared.INCR_HISTORY_CUTOFF}",
     ),
 ]
 
@@ -179,10 +178,8 @@ def test_constant_splits_raw_table(duck, name, table, pred):
 def test_quality_cutoff_splits_scores(spark, sf_small):
     """QUALITY_CUTOFF must land inside the observed quality_score range."""
     from us_dot_flights_lakehouse_spark.llm import textstats
-    from us_dot_flights_lakehouse_spark.queries.llm import (
-        QUALITY_CUTOFF,
-        read_corpus,
-    )
+    from us_dot_flights_lakehouse_spark.sources.readers import read_corpus
+    from us_dot_flights_lakehouse_spark.queries.tokpack_q import QUALITY_CUTOFF
 
     docs = read_corpus(spark, sf_small, "documents")
     kept, dropped = (

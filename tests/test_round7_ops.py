@@ -11,7 +11,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from us_dot_flights_lakehouse_spark.queries import relational as qrel
+from us_dot_flights_lakehouse_spark.queries import agg_q, audit_q, funcs_q, join_q, window_q
 from us_dot_flights_lakehouse_spark.queries import streaming as qst
 
 
@@ -36,7 +36,7 @@ def tiny_orders_dir(spark, tmp_path_factory):
 
 
 def test_a31_ks_closed_form(spark, tiny_orders_dir):
-    row = qrel.a31_ks_drift(spark, tiny_orders_dir).collect()[0]
+    row = agg_q.a31_ks_drift(spark, tiny_orders_dir).collect()[0]
     assert (row["n1"], row["n2"]) == (2, 2)
     # CDF gap peaks at 2/4 = 0.5 (at price 10.00 and 20.00; argmax is
     # the smallest price among ties by the query's tie-break)
@@ -44,14 +44,14 @@ def test_a31_ks_closed_form(spark, tiny_orders_dir):
 
 
 def test_a32_wasserstein_closed_form(spark, tiny_orders_dir):
-    row = qrel.a32_wasserstein_drift(spark, tiny_orders_dir).collect()[0]
+    row = agg_q.a32_wasserstein_drift(spark, tiny_orders_dir).collect()[0]
     assert (row["n1"], row["n2"]) == (2, 2)
     # a clean +10 dollar location shift has earth-mover distance 10
     assert row["w1_distance"] == pytest.approx(10.0)
 
 
 def test_a33_welch_closed_form(spark, tiny_orders_dir):
-    row = qrel.a33_welch_t_drift(spark, tiny_orders_dir).collect()[0]
+    row = agg_q.a33_welch_t_drift(spark, tiny_orders_dir).collect()[0]
     assert (row["mean_before"], row["mean_after"]) == (15.0, 25.0)
     assert row["var_before"] == pytest.approx(50.0)
     assert row["var_after"] == pytest.approx(50.0)
@@ -75,7 +75,7 @@ def test_j18_salted_equals_plain_join(spark, sf_small):
     )
     got = {
         r["event_type"]: (r["n_events"], r["sum_user_totals"])
-        for r in qrel.j18_salted_skew_join(spark, sf_small).collect()
+        for r in join_q.j18_salted_skew_join(spark, sf_small).collect()
     }
     want = {
         r["event_type"]: (r["n_events"], r["sum_user_totals"])
@@ -85,18 +85,18 @@ def test_j18_salted_equals_plain_join(spark, sf_small):
 
 
 def test_o10_systematic_spacing(spark, sf_small):
-    rows = qrel.o10_systematic_sample(spark, sf_small).collect()
+    rows = funcs_q.o10_systematic_sample(spark, sf_small).collect()
     n = spark.read.parquet(f"{sf_small}/orders.parquet").count()
-    assert len(rows) == (n + qrel.O10_EVERY_K - 1) // qrel.O10_EVERY_K
-    assert all(r["rank"] % qrel.O10_EVERY_K == 0 for r in rows)
+    assert len(rows) == (n + funcs_q.O10_EVERY_K - 1) // funcs_q.O10_EVERY_K
+    assert all(r["rank"] % funcs_q.O10_EVERY_K == 0 for r in rows)
     # evenly spaced over the sort order: ranks are 0, K, 2K, ...
     assert sorted(r["rank"] for r in rows) == [
-        i * qrel.O10_EVERY_K for i in range(len(rows))
+        i * funcs_q.O10_EVERY_K for i in range(len(rows))
     ]
 
 
 def test_g5_pair_invariants(spark, sf_small):
-    rows = qrel.g5_neighbor_overlap(spark, sf_small).collect()
+    rows = join_q.g5_neighbor_overlap(spark, sf_small).collect()
     assert rows, "g5 returned no pairs at sf0.001"
     for r in rows:
         assert r["supp_a"] < r["supp_b"]
@@ -159,7 +159,7 @@ def test_x10_dynamic_partition_pruning_plan(spark, sf_small):
     """The fact scan must carry a dynamicpruning PartitionFilter fed by
     the dim subquery — the mechanism the query exists to exercise."""
     plan = (
-        qrel.x10_partition_pruned_scan(spark, sf_small)
+        audit_q.x10_partition_pruned_scan(spark, sf_small)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -170,9 +170,7 @@ def test_x10_dynamic_partition_pruning_plan(spark, sf_small):
 
 def test_dd_incremental_span_probe_bounds(spark, sf_small):
     """hist_share in [0,1]; exact cross-cutoff duplicates score 1.0."""
-    from us_dot_flights_lakehouse_spark.queries.llm import (
-        dd_incremental_span_probe,
-    )
+    from us_dot_flights_lakehouse_spark.queries.dedup_q import dd_incremental_span_probe
 
     rows = dd_incremental_span_probe(spark, sf_small).collect()
     assert rows
@@ -182,7 +180,7 @@ def test_dd_incremental_span_probe_bounds(spark, sf_small):
 
 
 def test_a35_decile_table_shape(spark, sf_small):
-    rows = {r["decile"]: r for r in qrel.a35_quantile_drift(spark, sf_small).collect()}
+    rows = {r["decile"]: r for r in agg_q.a35_quantile_drift(spark, sf_small).collect()}
     assert sorted(rows) == list(range(1, 10))
     # quantiles are monotone within each sample
     qb = [rows[i]["q_before"] for i in range(1, 10)]
@@ -195,7 +193,7 @@ def test_w21_band_bounds(spark, sf_small):
     """p90 of a trailing window lies within that window's min/max —
     verified on the first 7 days where the window is the full prefix."""
     rows = sorted(
-        qrel.w21_rolling_quantile(spark, sf_small).collect(),
+        window_q.w21_rolling_quantile(spark, sf_small).collect(),
         key=lambda r: r["day"],
     )
     prefix = [r["revenue"] for r in rows[:7]]
@@ -207,7 +205,7 @@ def test_w21_band_bounds(spark, sf_small):
 
 def test_ts_code_detect_flags_code(spark):
     """A code-looking doc trips the verdict; plain prose does not."""
-    from us_dot_flights_lakehouse_spark.queries import llm as qllm
+    from us_dot_flights_lakehouse_spark.queries import text_q
 
     code = "def f(x):\n    y = x + 1;\n    return {x: [y]};\n" * 3
     prose = "The quick brown fox jumps over the lazy dog. " * 10
@@ -221,6 +219,6 @@ def test_ts_code_detect_flags_code(spark):
 
     d = tempfile.mkdtemp()
     df.coalesce(1).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    out = {r["doc_id"]: r for r in qllm.ts_code_detect(spark, d).collect()}
+    out = {r["doc_id"]: r for r in text_q.ts_code_detect(spark, d).collect()}
     assert out[1]["is_codelike"] is True
     assert out[2]["is_codelike"] is False

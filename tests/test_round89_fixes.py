@@ -6,11 +6,11 @@ the generated data takes; these force the paths the fixes exist for):
    (queries/quality.py::composite_pk_expr): a NULL component must NOT
    collapse onto a real value, Spark's \\x1eNULL sentinel must equal the
    oracle's chr(30)||'NULL', and the audit must count the duplicate.
-2. f_variant_suite's splice gate (queries/relational.py): a splice that
+2. f_variant_suite's splice gate (queries/funcs_q.py): a splice that
    produces malformed JSON and a props that already carries an "m" key
    must both yield NULL/skip — no ANSI throw — and agree with the
    DuckDB oracle row-for-row.
-3. src_xml_roundtrip's fixture validity (queries/llm.py): a markerless
+3. src_xml_roundtrip's fixture validity (queries/corpus_misc_q.py): a markerless
    (torn) directory squatting at the fixture path must be evicted and
    rebuilt, never trusted.
 """
@@ -24,8 +24,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from us_dot_flights_lakehouse_spark.queries import llm as qllm
-from us_dot_flights_lakehouse_spark.queries import relational as qrel
+from us_dot_flights_lakehouse_spark.queries import corpus_misc_q, funcs_q
 from us_dot_flights_lakehouse_spark.queries.quality import composite_pk_expr
 
 
@@ -121,7 +120,7 @@ def variant_sf_dir(spark, tmp_path_factory):
 
 
 def _variant_results(spark, sf_dir):
-    rows = qrel.f_variant_suite(spark, sf_dir).collect()
+    rows = funcs_q.f_variant_suite(spark, sf_dir).collect()
     return sorted(
         (r["event_id"], r["k_val"], r["k_str"], r["k_missing"]) for r in rows
     )
@@ -152,7 +151,7 @@ def test_variant_gate_matches_oracle(spark, variant_sf_dir):
         "CREATE VIEW events AS SELECT * FROM "
         f"read_parquet('{variant_sf_dir}/events.parquet/*.parquet')"
     )
-    want = sorted(tuple(r) for r in con.execute(qrel.F_VARIANT_ORACLE).fetchall())
+    want = sorted(tuple(r) for r in con.execute(funcs_q.F_VARIANT_ORACLE).fetchall())
     con.close()
     assert _variant_results(spark, variant_sf_dir) == want
 
@@ -180,7 +179,7 @@ def test_xml_markerless_squatter_evicted(spark, sf_small):
     with open(junk, "w") as f:
         f.write("<docs><doc><doc_id>999999</doc_id></doc></docs>")
     # no _SUCCESS marker: the squatter must be evicted, not trusted
-    n = qllm.src_xml_roundtrip(spark, sf_small).count()
+    n = corpus_misc_q.src_xml_roundtrip(spark, sf_small).count()
     assert n == 500  # documents row count at sf0.001, not the junk's 1
     assert os.path.isfile(os.path.join(out, "_SUCCESS"))
     assert not os.path.exists(junk)
@@ -189,10 +188,10 @@ def test_xml_markerless_squatter_evicted(spark, sf_small):
 def test_xml_committed_fixture_reused(spark, sf_small):
     out = _xml_fixture_path(sf_small)
     # previous test (or a fresh build) left a committed fixture
-    qllm.src_xml_roundtrip(spark, sf_small).count()
+    corpus_misc_q.src_xml_roundtrip(spark, sf_small).count()
     before = sorted(os.listdir(out))
     mtime = os.path.getmtime(out)
-    qllm.src_xml_roundtrip(spark, sf_small).count()
+    corpus_misc_q.src_xml_roundtrip(spark, sf_small).count()
     assert sorted(os.listdir(out)) == before
     assert os.path.getmtime(out) == mtime  # untouched — no rebuild
 
@@ -232,7 +231,7 @@ def test_xml_rename_race_waits_for_concurrent_marker(spark, sf_small, monkeypatc
     t = threading.Thread(target=commit_later)
     t.start()
     try:
-        n = qllm.src_xml_roundtrip(spark, sf_small).count()
+        n = corpus_misc_q.src_xml_roundtrip(spark, sf_small).count()
     finally:
         t.join()
     assert n == 1  # the concurrent run's fixture was honored, no raise
@@ -261,5 +260,5 @@ def test_xml_rename_race_reraises_without_marker(spark, sf_small, monkeypatch):
 
     monkeypatch.setattr(os, "rename", failing_rename)
     with pytest.raises(OSError):
-        qllm.src_xml_roundtrip(spark, sf_small).count()
+        corpus_misc_q.src_xml_roundtrip(spark, sf_small).count()
     shutil.rmtree(out, ignore_errors=True)

@@ -16,13 +16,7 @@ PKG = Path(__file__).resolve().parent.parent / "us_dot_flights_lakehouse_spark"
 #: pattern -> the (module, function) pairs allowed to contain it
 HOMES = {
     "bounded collect": {("operators/physical.py", "bounded_arrow")},
-    "cache": {
-        ("operators/physical.py", "cached"),
-        # read_csv_robust returns two views over ONE cached PERMISSIVE
-        # scan; the views outlive the function, so the caller owns the
-        # release and no scope can close inside it
-        ("sources/readers.py", "read_csv_robust"),
-    },
+    "cache": {("operators/physical.py", "cached")},
     "unpersist": {("operators/physical.py", "cached")},
     "scan-width probe": {
         ("sources/readers.py", "spread_scan"),
@@ -103,7 +97,7 @@ def _no_cache(spark) -> bool:
 @pytest.fixture
 def clean_cache(spark):
     """Start from an empty cache manager: the session is shared, and a
-    test's cached input (say, read_csv_robust's) is not this test's leak."""
+    test's cached input is not this test's leak."""
     spark.catalog.clearCache()
     assert _no_cache(spark)
     return spark

@@ -305,18 +305,6 @@ def test_range_clustered_write_produces_disjoint_file_ranges(spark, tmp_path_fac
     assert spark.read.parquet(path).count() == 10_000
 
 
-def test_read_csv_robust_quarantines_malformed_rows(spark, tmp_path_factory):
-    from us_dot_flights_lakehouse_spark.sources.readers import read_csv_robust
-
-    src = tmp_path_factory.mktemp("robust_csv")
-    with open(src / "data.csv", "w") as f:
-        f.write("k,v\n1,10.5\nnot_an_int,oops,extra\n3,30.0\n")
-    valid, corrupt = read_csv_robust(spark, str(src), "k int, v double")
-    assert sorted(tuple(r) for r in valid.collect()) == [(1, 10.5), (3, 30.0)]
-    bad = [r[0] for r in corrupt.collect()]
-    assert bad == ["not_an_int,oops,extra"]
-
-
 def test_zorder_write_narrows_footer_ranges_on_both_columns(spark, tmp_path_factory):
     import glob
     import pyarrow.parquet as pq

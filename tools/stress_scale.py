@@ -38,15 +38,22 @@ def _query_modules():
 def _seam(attr: str, fn) -> None:
     """Set read_table/read_corpus across ALL loaded query modules.
 
-    Since the round-13 family split, a query function's globals live in
-    its family module (agg_q, sketch_q, dedup_q, ...), so patching only
-    the aggregator (queries.relational / queries.llm) is a silent no-op:
+    A query function's globals live in its family module (agg_q,
+    sketch_q, dedup_q, ...); patching any other module is a silent no-op:
     the probe would read the REAL tables on both the 1x and Nx side and
     report a meaningless 1.0x growth. This seam patches every loaded
     queries.* module that binds the attribute."""
     for m in _query_modules():
         if hasattr(m, attr):
             setattr(m, attr, fn)
+
+
+def _builders(*names: str):
+    """(name, builder) pairs looked up in the query catalog."""
+    from us_dot_flights_lakehouse_spark.queries import queries
+
+    catalog = queries()
+    return [(n, catalog[n]) for n in names]
 
 
 def _seam_restore() -> None:
@@ -159,7 +166,7 @@ def main():
     docsN = scaled(spark, "documents", factor, "doc_id").cache()
     docs1.count(); docsN.count()
 
-    from us_dot_flights_lakehouse_spark.queries.llm import (
+    from us_dot_flights_lakehouse_spark.queries.dedup_q import (
         JACCARD_THRESHOLD,
         SIMHASH_MAX_HAMMING,
     )
@@ -574,7 +581,7 @@ def round4_families(spark, docs1, docsN, emb1, embN, factor):
     from us_dot_flights_lakehouse_spark.llm import multimodal
     from us_dot_flights_lakehouse_spark.llm.dedup import containment_pairs
     from us_dot_flights_lakehouse_spark.llm.textstats import text_stats
-    from us_dot_flights_lakehouse_spark.queries.llm import CONTAINMENT_THRESHOLD
+    from us_dot_flights_lakehouse_spark.queries.dedup_q import CONTAINMENT_THRESHOLD
 
     # MIPS: broadcast 20 probes x one corpus scan (query shape)
     def mips(e):
@@ -755,9 +762,6 @@ def round5b_families(spark, factor):
     """Round-5 session-2 shapes at Nx, exercised through the REAL catalog
     query code: scaled tables are injected by monkeypatching the reader
     seam, so the measured plan is exactly the production one."""
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
-    from us_dot_flights_lakehouse_spark.sources import readers
 
     id_cols = {
         "events": "event_id",
@@ -780,30 +784,27 @@ def round5b_families(spark, factor):
 
         return read
 
-    targets = [
-        ("w8_rolling_anomaly", rel.w8_rolling_anomaly),
-        ("w12_ewma_smoothing", rel.w12_ewma_smoothing),
-        ("a20_equidepth_histogram", rel.a20_equidepth_histogram),
-        ("a21_pearson_corr", rel.a21_pearson_corr),
-        ("a22_copurchase_lift", rel.a22_copurchase_lift),
-        ("a23_mad_robust_stats", rel.a23_mad_robust_stats),
-        ("p8_winsorize", rel.p8_winsorize),
-        ("p9_standardize", rel.p9_standardize),
-        ("o5_benford_audit", rel.o5_benford_audit),
-        ("o7_id_continuity", rel.o7_id_continuity),
-        ("w11_rank_suite", rel.w11_rank_suite),
-        ("g1_bipartite_rank", rel.g1_bipartite_rank),
-        ("j16_point_in_time_join", llm.j16_point_in_time_join),
-        ("tp_sft_format", llm.tp_sft_format),
-        ("dd_cluster_keep_best", llm.dd_cluster_keep_best),
-    ]
-    orig_rel, orig_llm = rel.read_table, llm.read_table
-    orig_corpus, orig_readers = llm.read_corpus, readers.read_table
+    targets = _builders(
+        "w8_rolling_anomaly",
+        "w12_ewma_smoothing",
+        "a20_equidepth_histogram",
+        "a21_pearson_corr",
+        "a22_copurchase_lift",
+        "a23_mad_robust_stats",
+        "p8_winsorize",
+        "p9_standardize",
+        "o5_benford_audit",
+        "o7_id_continuity",
+        "w11_rank_suite",
+        "g1_bipartite_rank",
+        "j16_point_in_time_join",
+        "tp_sft_format",
+        "dd_cluster_keep_best",
+    )
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
-                _seam("read_table", scaled_table(f))
                 _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
@@ -814,7 +815,6 @@ def round5b_families(spark, factor):
             )
     finally:
         _seam_restore()
-        readers.read_table = orig_readers
 
 
 
@@ -825,8 +825,6 @@ def round6_families(spark, factor):
     entropy gates, sampled triangle census, MinHash calibration,
     Holt-Winters kernel, FFD packing, interval-align join, Theil-Sen,
     CUSUM/seasonal, HHI, chi-square, conversation lint, drift audit."""
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
 
     id_cols = {
         "events": "event_id",
@@ -854,34 +852,32 @@ def round6_families(spark, factor):
 
         return read
 
-    targets = [
-        ("dd_exact_substr", llm.dd_exact_substr),
-        ("dd_span_dedup_apply", llm.dd_span_dedup_apply),
-        ("ts_entropy_gates", llm.ts_entropy_gates),
-        ("dd_minhash_calibration", llm.dd_minhash_calibration),
-        ("tp_pack_bestfit", llm.tp_pack_bestfit),
-        ("tp_chat_lint", llm.tp_chat_lint),
-        ("q_schema_drift", llm.q_schema_drift),
-        ("ts_zipf_audit", llm.ts_zipf_audit),
-        ("tp_loss_masking", llm.tp_loss_masking),
-        ("mm_exif_strip", llm.mm_exif_strip),
-        ("o8_reservoir_sample", llm.o8_reservoir_sample),
-        ("ts_source_containment", llm.ts_source_containment),
-        ("g2_triangle_count", rel.g2_triangle_count),
-        ("w17_holt_winters", rel.w17_holt_winters),
-        ("j17_interval_align", rel.j17_interval_align),
-        ("a24_theil_sen", rel.a24_theil_sen),
-        ("a25_hhi_concentration", rel.a25_hhi_concentration),
-        ("a26_chi2_independence", rel.a26_chi2_independence),
-        ("w15_changepoint_cusum", rel.w15_changepoint_cusum),
-        ("w16_seasonal_decompose", rel.w16_seasonal_decompose),
-    ]
-    orig_rel, orig_llm, orig_corpus = rel.read_table, llm.read_table, llm.read_corpus
+    targets = _builders(
+        "dd_exact_substr",
+        "dd_span_dedup_apply",
+        "ts_entropy_gates",
+        "dd_minhash_calibration",
+        "tp_pack_bestfit",
+        "tp_chat_lint",
+        "q_schema_drift",
+        "ts_zipf_audit",
+        "tp_loss_masking",
+        "mm_exif_strip",
+        "o8_reservoir_sample",
+        "ts_source_containment",
+        "g2_triangle_count",
+        "w17_holt_winters",
+        "j17_interval_align",
+        "a24_theil_sen",
+        "a25_hhi_concentration",
+        "a26_chi2_independence",
+        "w15_changepoint_cusum",
+        "w16_seasonal_decompose",
+    )
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
-                _seam("read_table", scaled_table(f))
                 _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
@@ -903,10 +899,6 @@ def round6b_families(spark, factor):
     reconciliation, dedup pipeline verdict + source report + threshold
     sweep, anomaly ensemble, windowed top-k, audio normalize audit,
     CSV quarantine."""
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
-    import us_dot_flights_lakehouse_spark.queries.quality as qual
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
-    import us_dot_flights_lakehouse_spark.queries.streaming as st
 
     id_cols = {
         "events": "event_id",
@@ -933,45 +925,35 @@ def round6b_families(spark, factor):
 
         return read
 
-    targets = [
-        ("q_table_stats_approx", qual.q_table_stats_approx),
-        ("dd_incremental_minhash", llm.dd_incremental_minhash),
-        ("sim_cur_decomposition", llm.sim_cur_decomposition),
-        ("sim_ndcg_eval", llm.sim_ndcg_eval),
-        ("sim_matryoshka_truncation", llm.sim_matryoshka_truncation),
-        ("tp_annotation_agreement", llm.tp_annotation_agreement),
-        ("sim_power_iteration", llm.sim_power_iteration),
-        ("tp_preference_pairs", llm.tp_preference_pairs),
-        ("a27_bootstrap_ci", rel.a27_bootstrap_ci),
-        ("q_order_reconciliation", rel.q_order_reconciliation),
-        ("dd_pipeline_verdict", llm.dd_pipeline_verdict),
-        ("tp_packing_efficiency", llm.tp_packing_efficiency),
-        ("sim_fisher_separability", llm.sim_fisher_separability),
-        ("w18_anomaly_ensemble", rel.w18_anomaly_ensemble),
-        ("st_windowed_topk", st.st_windowed_topk),
-        ("sim_intrinsic_dimension", llm.sim_intrinsic_dimension),
-        ("dd_source_dedup_report", llm.dd_source_dedup_report),
-        ("mm_audio_normalize_audit", llm.mm_audio_normalize_audit),
-        ("tp_bpe_merge_step", llm.tp_bpe_merge_step),
-        ("dd_threshold_sweep", llm.dd_threshold_sweep),
-        ("src_csv_badrecords", rel.src_csv_badrecords),
-    ]
-    origs = (
-        rel.read_table,
-        llm.read_table,
-        llm.read_corpus,
-        qual.read_table,
-        st.read_table,
+    targets = _builders(
+        "q_table_stats_approx",
+        "dd_incremental_minhash",
+        "sim_cur_decomposition",
+        "sim_ndcg_eval",
+        "sim_matryoshka_truncation",
+        "tp_annotation_agreement",
+        "sim_power_iteration",
+        "tp_preference_pairs",
+        "a27_bootstrap_ci",
+        "q_order_reconciliation",
+        "dd_pipeline_verdict",
+        "tp_packing_efficiency",
+        "sim_fisher_separability",
+        "w18_anomaly_ensemble",
+        "st_windowed_topk",
+        "sim_intrinsic_dimension",
+        "dd_source_dedup_report",
+        "mm_audio_normalize_audit",
+        "tp_bpe_merge_step",
+        "dd_threshold_sweep",
+        "src_csv_badrecords",
     )
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
                 _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
-                _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
                 times.append(t)
             print(
@@ -979,13 +961,7 @@ def round6b_families(spark, factor):
                 flush=True,
             )
     finally:
-        (
-            rel.read_table,
-            llm.read_table,
-            llm.read_corpus,
-            qual.read_table,
-            st.read_table,
-        ) = origs
+        _seam_restore()
 
 
 def round6c_families(spark, factor):
@@ -994,9 +970,6 @@ def round6c_families(spark, factor):
     k-core peel, Mann-Whitney AUC, Heaps' law, LSH recall lift,
     attribution, freshness SLA, Gini, IVF drift, Neyman allocation,
     incremental MinHash probe."""
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
-    import us_dot_flights_lakehouse_spark.queries.quality as qual
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
 
     id_cols = {
         "events": "event_id",
@@ -1023,28 +996,25 @@ def round6c_families(spark, factor):
 
         return read
 
-    targets = [
-        ("w19_autocorrelation", rel.w19_autocorrelation),
-        ("a28_mutual_information", rel.a28_mutual_information),
-        ("g3_kcore_decompose", rel.g3_kcore_decompose),
-        ("tp_ranker_auc", llm.tp_ranker_auc),
-        ("ts_heaps_law", llm.ts_heaps_law),
-        ("sim_lsh_recall_audit", llm.sim_lsh_recall_audit),
-        ("w20_attribution", rel.w20_attribution),
-        ("q_freshness_audit", rel.q_freshness_audit),
-        ("a29_nation_gini", rel.a29_nation_gini),
-        ("sim_index_drift", llm.sim_index_drift),
-        ("tp_neyman_allocation", llm.tp_neyman_allocation),
-    ]
-    origs = (rel.read_table, llm.read_table, llm.read_corpus, qual.read_table)
+    targets = _builders(
+        "w19_autocorrelation",
+        "a28_mutual_information",
+        "g3_kcore_decompose",
+        "tp_ranker_auc",
+        "ts_heaps_law",
+        "sim_lsh_recall_audit",
+        "w20_attribution",
+        "q_freshness_audit",
+        "a29_nation_gini",
+        "sim_index_drift",
+        "tp_neyman_allocation",
+    )
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
                 _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
                 times.append(t)
             print(
@@ -1061,9 +1031,6 @@ def round6d_families(spark, factor):
     assignment. (x8/x9 are excluded: their write-once fixtures would be
     reused across factors, making the ratio meaningless — their scaling
     shapes are the already-stressed full-outer diff and bucketed join.)"""
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
-    import us_dot_flights_lakehouse_spark.queries.streaming as st
 
     id_cols = {
         "events": "event_id",
@@ -1090,29 +1057,26 @@ def round6d_families(spark, factor):
 
         return read
 
-    targets = [
-        ("dd_lsh_tuning_curve", llm.dd_lsh_tuning_curve),
-        ("mm_scene_cuts", llm.mm_scene_cuts),
-        ("ts_ttr_diversity", llm.ts_ttr_diversity),
-        ("ts_quality_classifier", llm.ts_quality_classifier),
-        ("a30_weighted_median", rel.a30_weighted_median),
-        ("st_windowed_cardinality", st.st_windowed_cardinality),
-        ("o9_dense_rank_ids", rel.o9_dense_rank_ids),
-        ("q_skew_report", rel.q_skew_report),
-        ("g4_label_propagation", rel.g4_label_propagation),
-        ("a31_ks_drift", rel.a31_ks_drift),
-        ("mm_frame_dedup", llm.mm_frame_dedup),
-        ("dd_incremental_clusters", llm.dd_incremental_clusters),
-    ]
-    origs = (rel.read_table, llm.read_table, llm.read_corpus, st.read_table)
+    targets = _builders(
+        "dd_lsh_tuning_curve",
+        "mm_scene_cuts",
+        "ts_ttr_diversity",
+        "ts_quality_classifier",
+        "a30_weighted_median",
+        "st_windowed_cardinality",
+        "o9_dense_rank_ids",
+        "q_skew_report",
+        "g4_label_propagation",
+        "a31_ks_drift",
+        "mm_frame_dedup",
+        "dd_incremental_clusters",
+    )
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
                 _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
                 times.append(t)
             print(
@@ -1251,7 +1215,7 @@ def round12_families(spark, factor, only_target=None):
     import shutil
     import tempfile
 
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
+    from us_dot_flights_lakehouse_spark.queries import sketch_q
 
     cache = {}
 
@@ -1266,18 +1230,17 @@ def round12_families(spark, factor, only_target=None):
     run_jadv = only_target in (None, "q_join_cardinality_advisor")
     if not (run_a41 or run_build or run_jadv):
         sys.exit(f"unknown round12 target {only_target!r}")
-    orig_rel = rel.read_table
     try:
         if run_a41:
             times = []
             for f in (1, factor):
                 _seam("read_table", lambda s_, d_, n_, f=f: (
-                    scaled_orders(f) if n_ == "orders" else orig_rel(s_, d_, n_)
+                    scaled_orders(f) if n_ == "orders" else read_table(s_, d_, n_)
                 ))
                 times.append(
                     timed(
                         f"a41_sampled_kmv_crosscheck@{f}x",
-                        rel.a41_sampled_kmv_crosscheck(spark, SF_DIR),
+                        sketch_q.a41_sampled_kmv_crosscheck(spark, SF_DIR),
                     )
                 )
             print(
@@ -1304,7 +1267,6 @@ def round12_families(spark, factor, only_target=None):
                 li_cache[f].count()
             return li_cache[f]
 
-        orig = rel.read_table
         try:
             times = []
             for f in (1, factor):
@@ -1313,12 +1275,12 @@ def round12_families(spark, factor, only_target=None):
                     if n_ == "lineitem"
                     else scaled_orders(f)
                     if n_ == "orders"
-                    else orig(s_, d_, n_)
+                    else read_table(s_, d_, n_)
                 ))
                 times.append(
                     timed(
                         f"q_join_cardinality_advisor@{f}x",
-                        rel.q_join_cardinality_advisor(spark, SF_DIR),
+                        sketch_q.q_join_cardinality_advisor(spark, SF_DIR),
                     )
                 )
             print(
@@ -1334,7 +1296,7 @@ def round12_families(spark, factor, only_target=None):
             path = f"{tempfile.gettempdir()}/us_dot_x12stress_{f}x"
             shutil.rmtree(path, ignore_errors=True)
             t0 = time.perf_counter()
-            rel._x12_build_mart(spark, scaled_orders(f), path)
+            sketch_q._x12_build_mart(spark, scaled_orders(f), path)
             t = time.perf_counter() - t0
             print(f"x12_build@{f}x: {t:.2f}s", flush=True)
             times.append(t)
@@ -1366,9 +1328,6 @@ def round10_families(spark, factor, only_target=None):
     - g1/g5 graph expansions grow with edge count x neighborhood size;
     - the sketch queries must stay ~linear (partials are cap-bounded;
       only the exact-companion CHECK is row-scale)."""
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
-    import us_dot_flights_lakehouse_spark.queries.streaming as st
 
     id_cols = {
         "events": "event_id",
@@ -1395,36 +1354,32 @@ def round10_families(spark, factor, only_target=None):
 
         return read
 
-    targets = [
-        ("a38_kll_quantile_sketch", rel.a38_kll_quantile_sketch),
-        ("a39_mg_topk_sketch", rel.a39_mg_topk_sketch),
-        ("w23_sketch_rolling_quantile", rel.w23_sketch_rolling_quantile),
-        ("w24_mg_rolling_topk", rel.w24_mg_rolling_topk),
-        ("st_windowed_quantile_sketch", st.st_windowed_quantile_sketch),
-        ("a40_kmv_distinct_sketch", rel.a40_kmv_distinct_sketch),
-        ("w25_kmv_rolling_distinct", rel.w25_kmv_rolling_distinct),
-        ("dd_kmv_source_overlap", llm.dd_kmv_source_overlap),
-        ("w8_rolling_anomaly", rel.w8_rolling_anomaly),
-        ("g1_bipartite_rank", rel.g1_bipartite_rank),
-        ("g5_neighbor_overlap", rel.g5_neighbor_overlap),
-        ("dd_minhash_lsh", llm.dd_minhash_lsh),
-        ("dd_cluster_keep_best", llm.dd_cluster_keep_best),
-        ("dd_incremental_clusters", llm.dd_incremental_clusters),
-    ]
+    targets = _builders(
+        "a38_kll_quantile_sketch",
+        "a39_mg_topk_sketch",
+        "w23_sketch_rolling_quantile",
+        "w24_mg_rolling_topk",
+        "st_windowed_quantile_sketch",
+        "a40_kmv_distinct_sketch",
+        "w25_kmv_rolling_distinct",
+        "dd_kmv_source_overlap",
+        "w8_rolling_anomaly",
+        "g1_bipartite_rank",
+        "g5_neighbor_overlap",
+        "dd_minhash_lsh",
+        "dd_cluster_keep_best",
+        "dd_incremental_clusters",
+    )
     if only_target:
         targets = [(n, f) for n, f in targets if n == only_target]
         if not targets:
             sys.exit(f"unknown round10 target {only_target!r}")
-    orig_rel, orig_llm, orig_corpus = rel.read_table, llm.read_table, llm.read_corpus
-    orig_st = st.read_table
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
                 _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
                 times.append(t)
             print(
@@ -1452,9 +1407,6 @@ def round7_families(spark, factor):
     source by content fingerprint, so a scaled reader would silently
     reuse 1x data; their scan-side scale behavior is the plain
     partitioned/xml reader path covered by S-family stress."""
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
-    import us_dot_flights_lakehouse_spark.queries.streaming as st
 
     id_cols = {
         "events": "event_id",
@@ -1481,30 +1433,26 @@ def round7_families(spark, factor):
 
         return read
 
-    targets = [
-        ("a32_wasserstein_drift", rel.a32_wasserstein_drift),
-        ("a33_welch_t_drift", rel.a33_welch_t_drift),
-        ("j18_salted_skew_join", rel.j18_salted_skew_join),
-        ("o10_systematic_sample", rel.o10_systematic_sample),
-        ("a34_cramers_v", rel.a34_cramers_v),
-        ("g5_neighbor_overlap", rel.g5_neighbor_overlap),
-        ("dd_soft_dedup_weights", llm.dd_soft_dedup_weights),
-        ("tp_context_truncation", llm.tp_context_truncation),
-        ("tp_dedup_aware_mixture", llm.tp_dedup_aware_mixture),
-        ("dd_incremental_span_probe", llm.dd_incremental_span_probe),
-        ("mm_hist_equalize", llm.mm_hist_equalize),
-        ("st_event_rate_alerts", st.st_event_rate_alerts),
-    ]
-    orig_rel, orig_llm, orig_corpus = rel.read_table, llm.read_table, llm.read_corpus
-    orig_st = st.read_table
+    targets = _builders(
+        "a32_wasserstein_drift",
+        "a33_welch_t_drift",
+        "j18_salted_skew_join",
+        "o10_systematic_sample",
+        "a34_cramers_v",
+        "g5_neighbor_overlap",
+        "dd_soft_dedup_weights",
+        "tp_context_truncation",
+        "tp_dedup_aware_mixture",
+        "dd_incremental_span_probe",
+        "mm_hist_equalize",
+        "st_event_rate_alerts",
+    )
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
                 _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
                 times.append(t)
             print(
@@ -1520,10 +1468,6 @@ def round7b_families(spark, factor):
     p90 band, PK audit, period-over-period, boilerplate report, new-user
     rate, composed sample weights, SQL UDF, parameterized SQL,
     partitioned UDTF, boxplot profile, silence gaps."""
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
-    import us_dot_flights_lakehouse_spark.queries.quality as qual
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
-    import us_dot_flights_lakehouse_spark.queries.streaming as st
 
     id_cols = {
         "events": "event_id",
@@ -1550,32 +1494,27 @@ def round7b_families(spark, factor):
 
         return read
 
-    targets = [
-        ("a35_quantile_drift", rel.a35_quantile_drift),
-        ("ts_code_detect", llm.ts_code_detect),
-        ("w21_rolling_quantile", rel.w21_rolling_quantile),
-        ("q_pk_uniqueness_audit", qual.q_pk_uniqueness_audit),
-        ("w22_period_over_period", rel.w22_period_over_period),
-        ("ts_boilerplate_lines", llm.ts_boilerplate_lines),
-        ("st_new_user_rate", st.st_new_user_rate),
-        ("tp_final_sample_weights", llm.tp_final_sample_weights),
-        ("f_sql_udf", rel.f_sql_udf),
-        ("f_param_sql", rel.f_param_sql),
-        ("f_udtf_partitioned", rel.f_udtf_partitioned),
-        ("a36_boxplot_profile", rel.a36_boxplot_profile),
-        ("st_silence_gaps", st.st_silence_gaps),
-    ]
-    orig_rel, orig_llm, orig_corpus = rel.read_table, llm.read_table, llm.read_corpus
-    orig_st, orig_qual = st.read_table, qual.read_table
+    targets = _builders(
+        "a35_quantile_drift",
+        "ts_code_detect",
+        "w21_rolling_quantile",
+        "q_pk_uniqueness_audit",
+        "w22_period_over_period",
+        "ts_boilerplate_lines",
+        "st_new_user_rate",
+        "tp_final_sample_weights",
+        "f_sql_udf",
+        "f_param_sql",
+        "f_udtf_partitioned",
+        "a36_boxplot_profile",
+        "st_silence_gaps",
+    )
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
                 _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
-                _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
                 times.append(t)
             print(
@@ -1605,7 +1544,7 @@ def round13_families(spark, factor, only_target=None):
       advisor table (4 edges, sketch path linear) + the advised join
       itself (broadcast at 1x right side). Expected ~linear.
     """
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
+    from us_dot_flights_lakehouse_spark.queries import queries
 
     cache = {}
 
@@ -1635,11 +1574,10 @@ def round13_families(spark, factor, only_target=None):
     run = [t for t in targets if only_target in (None, t)]
     if not run:
         sys.exit(f"unknown round13 target {only_target!r}")
-    orig = rel.read_table
     try:
         for name in run:
             scaled_names = targets[name]
-            fn = getattr(rel, name)
+            fn = queries()[name]
             # untimed warmup at 1x: JVM/codegen/parquet-footer costs
             # otherwise inflate the 1x reading and UNDERSTATE growth
             _seam_restore()
@@ -1651,7 +1589,7 @@ def round13_families(spark, factor, only_target=None):
                     if n_ == "orders" and "orders" in sn
                     else scaled_li(f)
                     if n_ == "lineitem" and "lineitem" in sn
-                    else orig(s_, d_, n_)
+                    else read_table(s_, d_, n_)
                 ))
                 # time CONSTRUCTION + execution: j19 collects its advisor
                 # table while BUILDING the DataFrame (the plan-time scalar

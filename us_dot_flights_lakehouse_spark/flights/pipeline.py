@@ -226,14 +226,6 @@ def run_marts(spark: SparkSession, paths: LakehousePaths) -> dict[str, DataFrame
     return {name: spark.read.parquet(paths.gold(name)) for name in _MART_NAMES}
 
 
-def run_gold(spark: SparkSession, paths: LakehousePaths) -> dict[str, DataFrame]:
-    """Dims → fact → marts (the three gold DAG stages in sequence)."""
-    out = run_dimensions(spark, paths)
-    out["fact_flights"] = run_fact(spark, paths)
-    out.update(run_marts(spark, paths))
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Orchestrated runner — the reference DAG as a callable
 # ---------------------------------------------------------------------------

@@ -1,7 +1,8 @@
 """Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash,
 embedding-cosine near-dup.
 
-All variants are pure DataFrame compositions (no Python UDFs): hashing is
+The text variants are pure DataFrame compositions (no Python UDFs; the
+embedding-cosine finders verify in Arrow-batched numpy): hashing is
 md5-based Column arithmetic (functions/text.hash28), signatures are wide
 grouped aggregations, and candidate generation is equi-join on bucket keys
 — each a single shuffle keyed on something with controlled cardinality.
@@ -30,12 +31,7 @@ from us_dot_flights_lakehouse_spark.functions.text import (
     shingles,
     tokenize,
 )
-from us_dot_flights_lakehouse_spark.functions.vectors import (
-    cosine,
-    norm,
-    to_double_array,
-)
-from us_dot_flights_lakehouse_spark.llm.similarity import lsh_bucket
+from us_dot_flights_lakehouse_spark.functions.vectors import to_double_array
 
 # --- shared MinHash parameters (mirrored into the DuckDB oracle SQL) -------
 MINHASH_PRIME = 1_000_000_007
@@ -358,36 +354,6 @@ def simhash_pairs(
         # bucket — emit from every surviving band and dedup instead
         proj = proj.distinct()
     return proj.filter(F.col("hamming") <= max_hamming)
-
-
-def embedding_neardup_pairs_expr(
-    emb: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-cosine near-dup (pure-expression reference variant):
-    norm-projected self-join, sequential-fold dot product. Kept as the
-    UDF-free baseline; ~2µs/pair of interpreted HOF evaluation makes it
-    10×+ slower than the numpy kernel below at O(n²) pair counts."""
-    v = emb.select(
-        F.col(id_col).alias("id"),
-        to_double_array(vec_col).alias("v"),
-    ).withColumn("nrm", norm("v"))
-    a, b = v.alias("a"), v.alias("b")
-    pairs = a.join(b, F.col("a.id") < F.col("b.id")).select(
-        F.col("a.id").alias("vec_id_a"),
-        F.col("b.id").alias("vec_id_b"),
-        (
-            F.aggregate(
-                F.zip_with("a.v", "b.v", lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, val: acc + val,
-            )
-            / (F.col("a.nrm") * F.col("b.nrm"))
-        ).alias("cos"),
-    )
-    return pairs.filter(F.col("cos") >= threshold).select("vec_id_a", "vec_id_b")
 
 
 def embedding_neardup_pairs(

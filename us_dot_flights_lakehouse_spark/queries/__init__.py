@@ -4,6 +4,12 @@ Each entry pairs a Spark DataFrame builder ``(spark, sf_dir) -> DataFrame``
 with (where SQL-expressible) an equivalent ANSI-SQL oracle string for DuckDB
 over the same parquet tables. ``__spark_entry__.py`` exposes this registry.
 
+Each module in ``_MODULES`` owns its entries: its ``QUERIES`` and
+``ORACLES`` dicts hold exactly the builders it defines. ``queries()``
+orders the catalog as the ``_PRIORITY`` names first (the driver samples
+the head), then every other entry in ``_MODULES`` order, each module's in
+its dict order. A name that two modules both register raises.
+
 Determinism contract (why results hash-match the oracle bit-for-bit):
 - money-like SUMs go through exact DECIMAL accumulation, surfaced as DOUBLE
   (float summation order is nondeterministic under parallel aggregation);
@@ -23,119 +29,145 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from us_dot_flights_lakehouse_spark.queries import (
+    agg_q,
+    audit_q,
+    corpus_misc_q,
+    dedup_q,
     flights,
-    llm,
+    funcs_q,
+    join_q,
+    mm_q,
     quality,
-    relational,
+    sim_q,
+    sketch_q,
     streaming,
+    text_q,
+    tokpack_q,
+    window_q,
 )
 
-_MODULES = (llm, streaming, quality, flights, relational)
+#: The modules that own catalog entries, in catalog order below the
+#: _PRIORITY head. Each defines ``QUERIES`` (name -> builder) and
+#: ``ORACLES`` (name -> SQL string, or a zero-arg callable returning one)
+#: holding exactly the entries whose builders it defines.
+_MODULES = (
+    flights,
+    agg_q,
+    join_q,
+    window_q,
+    funcs_q,
+    sketch_q,
+    audit_q,
+    quality,
+    streaming,
+    dedup_q,
+    sim_q,
+    text_q,
+    tokpack_q,
+    mm_q,
+    corpus_misc_q,
+)
 
 #: Names pulled to the FRONT of the registry, in this order. The driver's
 #: correctness harness samples a bounded prefix of the catalog (the head
-#: 50), so ordering is signal allocation: queries NEW or CHANGED this
-#: round come first, then — since round 13 — the entries whose most
-#: recent green DRIVER row is oldest (staleness rotation, recomputed
-#: per round by tools/rotation_plan.py; every catalog entry has >=1
-#: lifetime green driver row, and the full catalog is locally
-#: oracle-swept at three SFs each round regardless). Entries not listed
-#: keep their module registration order below the fold. Per-round
-#: rotation rationale lives in git history:
+#: 50), so ordering is signal allocation: queries whose code path changed
+#: recently come first, then the entries whose most recent green DRIVER
+#: row is oldest (staleness rotation, recomputed by tools/rotation_plan.py;
+#: every entry is still oracle-swept locally at three SFs). Per-rotation
+#: rationale lives in git history:
 #: `git log -L :_PRIORITY:us_dot_flights_lakehouse_spark/queries/__init__.py`.
 _PRIORITY = (
-    # ---- round-13 front-load (driver samples the FIRST 50 entries) ----
-    # New: the advisor-driven join seam — q_join_cardinality_advisor's
-    # strategy recommendation actually DRIVES the physical plan
-    # (broadcast hint vs forced shuffled SMJ; the partition count rides
-    # the advised_shuffle_partitions conf seam), semantics proven
-    # unchanged against a plain-SQL-join oracle:
+    # ---- changed paths (kernel rewrites, advisors, dup_clusters callers) ----
+    "g1_bipartite_rank",
+    "w8_rolling_anomaly",
+    "w12_ewma_smoothing",
+    "w14_holt_forecast",
+    "dd_cluster_keep_best",
+    "dd_semantic_dedup",
+    "dd_incremental_clusters",
+    "ts_entropy_gates",
     "j19_advised_join",
-    # New: join-key skew advisor (Misra-Gries heavy hitters per edge ->
-    # per-key salt/none verdict + salt count; the detection half of the
-    # r13 skew-stress gate) and the seam that applies it:
+    "q_join_cardinality_advisor",
     "q_join_skew_advisor",
     "j20_skew_advised_join",
-    # New: the group-by advisor's recommendation sizing the mart's
-    # pre-write repartition (the X2 anti-small-files seam, stats-driven):
     "a42_advised_mart_layout",
-    # New: range-layout advisor (exact-percentile cut points; the KLL
-    # path's CHECK at scale) and the seam writing the range-clustered,
-    # locally-sorted mart layout with oracle-pinned disjoint extents:
     "q_range_partition_advisor",
     "x13_advised_range_layout",
-    # ---- staleness rotation (VERDICT r12 item 1) ----
-    # The remaining head-50 slots go to the entries with the STALEST lifetime
-    # driver attestation (most recent green CORRECTNESS_r*.json row:
-    # 44 from r1-r2, 5 from r3 — computed by tools/rotation_plan.py,
-    # plan recorded in COVERAGE.md). They are covered by every local
-    # 306/306 sweep; this refreshes the DRIVER-side hard evidence.
-    "a10_cube_returnflag_status",  # last driver row r1
-    "a13_pivot_status_by_segment",  # last driver row r1
-    "a14_unpivot_status_counts",  # last driver row r1
-    "a15_grouping_sets",  # last driver row r1
-    "a16_collection_aggs",  # last driver row r1
-    "a17_bitwise_bool_aggs",  # last driver row r1
-    "a3_global_summary",  # last driver row r1
-    "a4_distinct_dim",  # last driver row r1
-    "a5_topk_parts",  # last driver row r1
-    "a7_grouped_dim_supplier",  # last driver row r1
-    "a9_rollup_segment_status",  # last driver row r1
-    "dd_fuzzy_name_pairs",  # last driver row r1
-    "f_array_suite",  # last driver row r1
-    "f_array_suite2",  # last driver row r1
-    "f_datetime_suite",  # last driver row r1
-    "f_datetime_suite2",  # last driver row r1
-    "f_explode_suite",  # last driver row r1
-    "f_map_suite",  # last driver row r1
-    "f_string_suite",  # last driver row r1
-    "f_string_suite2",  # last driver row r1
-    "f_udtf_shingles",  # last driver row r1
-    "f_xml_suite",  # last driver row r1
-    "j10_regional_revenue",  # last driver row r1
-    "j12_lateral_topk_orders",  # last driver row r1
-    "j2_star_fact_build",  # last driver row r1
-    "j4_outer_merge_daily_flow",  # last driver row r1
-    "j6_semi_high_value_customers",  # last driver row r1
-    "j7_anti_customers_without_orders",  # last driver row r1
-    "j9_range_join_price_bands",  # last driver row r1
-    "o3_date_dim",  # last driver row r1
-    "o4_recursive_month_spine",  # last driver row r1
-    "p4_conditional_cleaning",  # last driver row r1
-    "p5_null_handling",  # last driver row r1
-    "p6_grouped_minmax_scale",  # last driver row r1
-    "s1_deterministic_sample",  # last driver row r1
-    "u1_union_distinct_nations",  # last driver row r1
-    "u2_intersect_except_nations",  # last driver row r1
-    "u3_multiset_ops",  # last driver row r1
-    "w1_topk_per_group",  # last driver row r1
-    "w2_window_suite",  # last driver row r1
-    "fl_daily_airline_mart",  # last driver row r2
-    "fl_fact_star",  # last driver row r2
-    "j1_enrich_lookup_join",  # last driver row r2
-    "q_quality_report",  # last driver row r2
+    "q_groupby_cardinality_advisor",
+    "g4_label_propagation",
+    "a30_weighted_median",
+    "sim_kcenter_diversity",
+    "dd_dup_clusters",
+    # materialized peel-round oracle CTEs
+    "g3_kcore_decompose",
+    # NULL dhash rows are singletons
+    "mm_phash_dedup",
+    # ---- staleness rotation: the stalest driver attestations ----
     "a11_exact_quantiles",  # last driver row r3
     "a12_approx_sketches",  # last driver row r3
     "a18_stat_moments",  # last driver row r3
     "a8_describe_orders",  # last driver row r3
-    "dd_dup_clusters",  # last driver row r3
+    "dd_embedding_neardup",  # last driver row r3
+    "dd_exact_dedup",  # last driver row r3
+    "dd_minhash_lsh",  # last driver row r3
+    "dd_ngram_jaccard",  # last driver row r3
+    "dd_simhash_pairs",  # last driver row r3
+    "dd_simhash_values",  # last driver row r3
+    "f_json_suite",  # last driver row r3
+    "j11_clickstream_interval_join",  # last driver row r3
+    "j13_nullsafe_join",  # last driver row r3
+    "j8_asof_purchase_attribution",  # last driver row r3
+    "mm_byte_features",  # last driver row r3
+    "mm_frame_stats",  # last driver row r3
+    "mm_image_dims",  # last driver row r3
+    "mm_media_manifest",  # last driver row r3
+    "mm_mp4_meta",  # last driver row r3
+    "mm_pixel_stats",  # last driver row r3
+    "mm_wav_meta",  # last driver row r3
+    "sim_lsh_topk",  # last driver row r3
+    "sim_quantize_int8",  # last driver row r3
+    "sim_topk_cosine",  # last driver row r3
+    "st_session_window",  # last driver row r3
+    "st_sessionize",  # last driver row r3
+    "st_windowed_events",  # last driver row r3
+    "tp_contamination",  # last driver row r3
 )
-# Uniqueness guard so hand-counting the driver head-50 budget stays
-# honest. An explicit raise, not a bare assert: asserts vanish under
-# `python -O`, which would strip the guard exactly in optimized
-# deployments (ADVICE r11).
+#: the driver samples only the catalog's first _DRIVER_HEAD entries
+_DRIVER_HEAD = 50
+# Explicit raises, not bare asserts: asserts vanish under `python -O`.
 if len(_PRIORITY) != len(set(_PRIORITY)):
     _dups = sorted({n for n in _PRIORITY if _PRIORITY.count(n) > 1})
     raise ValueError(f"duplicate _PRIORITY entries: {_dups}")
+if len(_PRIORITY) > _DRIVER_HEAD:
+    raise ValueError(
+        f"_PRIORITY has {len(_PRIORITY)} names; the driver samples only "
+        f"the first {_DRIVER_HEAD}"
+    )
+
+
+def _merged(attr: str) -> dict:
+    """Union of every module's ``attr`` dict, in ``_MODULES`` order; a name
+    two modules both register raises instead of one silently shadowing
+    the other."""
+    out: dict = {}
+    owner: dict[str, str] = {}
+    for m in _MODULES:
+        for name, value in getattr(m, attr).items():
+            if name in owner:
+                raise ValueError(
+                    f"{attr} name {name!r} registered by both "
+                    f"{owner[name]} and {m.__name__}"
+                )
+            owner[name] = m.__name__
+            out[name] = value
+    return out
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for m in _MODULES:
-        merged.update(m.QUERIES)
+    merged = _merged("QUERIES")
     # a typo'd _PRIORITY name would otherwise silently demote that query
     # out of the driver's head-50 sample — fail loudly instead, same
-    # posture as the duplicate guard above (ADVICE r11 / review r12)
+    # posture as the duplicate guard above
     unknown = [n for n in _PRIORITY if n not in merged]
     if unknown:
         raise ValueError(f"_PRIORITY names not in any QUERIES module: {unknown}")
@@ -146,16 +178,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     out: dict[str, str] = {}
-    for m in _MODULES:
-        for name, sql in m.ORACLES.items():
-            if callable(sql):
-                # data-dependent oracle (e.g. sim_ivf_topk's literal
-                # centroids, re-trained from the parquet): build lazily;
-                # if the data isn't reachable, fall back to a rows-only
-                # check by omitting the entry.
-                try:
-                    sql = sql()
-                except Exception:
-                    continue
-            out[name] = sql
+    for name, sql in _merged("ORACLES").items():
+        if callable(sql):
+            # data-dependent oracle (e.g. sim_ivf_topk's literal
+            # centroids, re-trained from the parquet): build lazily;
+            # if the data isn't reachable, fall back to a rows-only
+            # check by omitting the entry.
+            try:
+                sql = sql()
+            except Exception:
+                continue
+        out[name] = sql
     return out

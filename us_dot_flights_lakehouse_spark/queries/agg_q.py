@@ -1,7 +1,7 @@
 """Aggregate / statistics queries (a*, daily_*): grouped aggs, drift, robust stats.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/relational.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+The module owns its catalog entries (``QUERIES``/``ORACLES`` at the end).
+See the package ``__init__`` for the cross-engine determinism contract.
 """
 
 from __future__ import annotations
@@ -16,28 +16,14 @@ from us_dot_flights_lakehouse_spark.operators.aggregates import (
     dec_sum,
     rollup_agg,
 )
-from us_dot_flights_lakehouse_spark.operators.generators import date_range_df
 from us_dot_flights_lakehouse_spark.operators.physical import bounded_arrow
 from us_dot_flights_lakehouse_spark.operators.quantiles import (
     collect_value_histogram,
     histogram_groups,
     percentiles_from_counts,
 )
-from us_dot_flights_lakehouse_spark.operators.joins import (
-    asof_join,
-    broadcast_star_join,
-    bucketed_range_join,
-    enrich_join,
-    outer_merge_coalesce,
-    semi_join,
-)
-from us_dot_flights_lakehouse_spark.operators.setops import (
-    except_distinct,
-    intersect_distinct,
-    union_distinct,
-)
+from us_dot_flights_lakehouse_spark.operators.joins import broadcast_star_join
 from us_dot_flights_lakehouse_spark.sources.readers import (
-    lookup_scan,
     read_corpus,
     read_table,
     spread_scan,
@@ -2505,3 +2491,78 @@ SELECT n_total, n_segments, n_statuses,
          AS cramers_v
 FROM folded
 """
+
+
+QUERIES = {
+    "daily_segment_performance": daily_segment_performance,
+    "a3_global_summary": a3_global_summary,
+    "a4_distinct_dim": a4_distinct_dim,
+    "a5_topk_parts": a5_topk_parts,
+    "a7_grouped_dim_supplier": a7_grouped_dim_supplier,
+    "a8_describe_orders": a8_describe_orders,
+    "a9_rollup_segment_status": a9_rollup_segment_status,
+    "a10_cube_returnflag_status": a10_cube_returnflag_status,
+    "a11_exact_quantiles": a11_exact_quantiles,
+    "a13_pivot_status_by_segment": a13_pivot_status_by_segment,
+    "a12_approx_sketches": a12_approx_sketches,
+    "a14_unpivot_status_counts": a14_unpivot_status_counts,
+    "a15_grouping_sets": a15_grouping_sets,
+    "a16_collection_aggs": a16_collection_aggs,
+    "a17_bitwise_bool_aggs": a17_bitwise_bool_aggs,
+    "a18_stat_moments": a18_stat_moments,
+    "a20_equidepth_histogram": a20_equidepth_histogram,
+    "a21_pearson_corr": a21_pearson_corr,
+    "a22_copurchase_lift": a22_copurchase_lift,
+    "a23_mad_robust_stats": a23_mad_robust_stats,
+    "a26_chi2_independence": a26_chi2_independence,
+    "a27_bootstrap_ci": a27_bootstrap_ci,
+    "a25_hhi_concentration": a25_hhi_concentration,
+    "a24_theil_sen": a24_theil_sen,
+    "a28_mutual_information": a28_mutual_information,
+    "a29_nation_gini": a29_nation_gini,
+    "a30_weighted_median": a30_weighted_median,
+    "a31_ks_drift": a31_ks_drift,
+    "a32_wasserstein_drift": a32_wasserstein_drift,
+    "a33_welch_t_drift": a33_welch_t_drift,
+    "a35_quantile_drift": a35_quantile_drift,
+    "a37_anova_oneway": a37_anova_oneway,
+    "a36_boxplot_profile": a36_boxplot_profile,
+    "a34_cramers_v": a34_cramers_v,
+}
+
+ORACLES = {
+    "daily_segment_performance": FLAGSHIP_ORACLE,
+    "a3_global_summary": A3_ORACLE,
+    "a4_distinct_dim": A4_ORACLE,
+    "a5_topk_parts": A5_ORACLE,
+    "a7_grouped_dim_supplier": A7_ORACLE,
+    "a8_describe_orders": A8_ORACLE,
+    "a9_rollup_segment_status": A9_ORACLE,
+    "a10_cube_returnflag_status": A10_ORACLE,
+    "a11_exact_quantiles": A11_ORACLE,
+    "a13_pivot_status_by_segment": A13_ORACLE,
+    "a12_approx_sketches": A12_ORACLE,
+    "a14_unpivot_status_counts": A14_ORACLE,
+    "a15_grouping_sets": A15_ORACLE,
+    "a16_collection_aggs": A16_ORACLE,
+    "a17_bitwise_bool_aggs": A17_ORACLE,
+    "a18_stat_moments": A18_ORACLE,
+    "a20_equidepth_histogram": _equidepth_oracle,
+    "a21_pearson_corr": A21_ORACLE,
+    "a22_copurchase_lift": A22_ORACLE,
+    "a23_mad_robust_stats": A23_ORACLE,
+    "a26_chi2_independence": A26_ORACLE,
+    "a27_bootstrap_ci": A27_ORACLE,
+    "a25_hhi_concentration": A25_ORACLE,
+    "a24_theil_sen": A24_ORACLE,
+    "a28_mutual_information": A28_ORACLE,
+    "a29_nation_gini": A29_ORACLE,
+    "a30_weighted_median": A30_ORACLE,
+    "a31_ks_drift": A31_ORACLE,
+    "a32_wasserstein_drift": A32_ORACLE,
+    "a33_welch_t_drift": A33_ORACLE,
+    "a35_quantile_drift": A35_ORACLE,
+    "a37_anova_oneway": A37_ORACLE,
+    "a36_boxplot_profile": A36_ORACLE,
+    "a34_cramers_v": A34_ORACLE,
+}

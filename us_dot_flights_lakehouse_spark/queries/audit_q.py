@@ -1,40 +1,14 @@
 """Data-quality audits (q_*) and physical-layout ops (x*).
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/relational.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+The module owns its catalog entries (``QUERIES``/``ORACLES`` at the end).
+See the package ``__init__`` for the cross-engine determinism contract.
 """
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
-from us_dot_flights_lakehouse_spark.operators.aggregates import (
-    MONEY,
-    conditional_avg,
-    conditional_count,
-    cube_agg,
-    dec_sum,
-    rollup_agg,
-)
-from us_dot_flights_lakehouse_spark.operators.generators import date_range_df
-from us_dot_flights_lakehouse_spark.operators.joins import (
-    asof_join,
-    broadcast_star_join,
-    bucketed_range_join,
-    enrich_join,
-    outer_merge_coalesce,
-    semi_join,
-)
-from us_dot_flights_lakehouse_spark.operators.setops import (
-    except_distinct,
-    intersect_distinct,
-    union_distinct,
-)
-from us_dot_flights_lakehouse_spark.sources.readers import (
-    lookup_scan,
-    read_corpus,
-    read_table,
-)
+from us_dot_flights_lakehouse_spark.sources.readers import read_table
 
 
 ZORDER_BITS = 10  # coordinates folded into 1024 cells per dimension
@@ -580,3 +554,24 @@ FROM orders
 WHERE year(o_orderdate) % 2 = 0
 GROUP BY 1
 """
+
+
+QUERIES = {
+    "x7_zorder_layout": x7_zorder_layout,
+    "q_order_reconciliation": q_order_reconciliation,
+    "q_freshness_audit": q_freshness_audit,
+    "x8_snapshot_diff": x8_snapshot_diff,
+    "x9_bucketed_join": x9_bucketed_join,
+    "q_skew_report": q_skew_report,
+    "x10_partition_pruned_scan": x10_partition_pruned_scan,
+}
+
+ORACLES = {
+    "x7_zorder_layout": _zorder_oracle,
+    "q_order_reconciliation": Q_RECON_ORACLE,
+    "q_freshness_audit": Q_FRESHNESS_ORACLE,
+    "x8_snapshot_diff": X8_ORACLE,
+    "x9_bucketed_join": X9_ORACLE,
+    "q_skew_report": Q_SKEW_ORACLE,
+    "x10_partition_pruned_scan": X10_ORACLE,
+}

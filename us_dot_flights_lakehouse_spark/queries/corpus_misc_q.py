@@ -1,36 +1,13 @@
 """Corpus I/O formats (src_*) plus misc ops hosted with the documents table.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/llm.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+The module owns its catalog entries (``QUERIES``/``ORACLES`` at the end).
+See the package ``__init__`` for the cross-engine determinism contract.
 """
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-import pandas as pd
-from us_dot_flights_lakehouse_spark.llm import (
-    curation,
-    dedup,
-    multimodal,
-    similarity,
-    textstats,
-    tokenizer,
-)
-from us_dot_flights_lakehouse_spark.llm.dedup import (
-    MINHASH_A,
-    MINHASH_B,
-    MINHASH_BANDS,
-    MINHASH_K,
-    MINHASH_PRIME,
-    SIMHASH_BANDS,
-    SIMHASH_BITS,
-)
-from us_dot_flights_lakehouse_spark.functions.text import (
-    hash28,
-    shingles,
-    tokenize,
-)
 from us_dot_flights_lakehouse_spark.sources.readers import read_corpus, read_table
 
 
@@ -512,3 +489,26 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 SRC_XML_ORACLE = """
 SELECT doc_id, lang, source, n_chars, md5(text) AS text_md5 FROM documents
 """
+
+
+QUERIES = {
+    "src_wds_roundtrip": src_wds_roundtrip,
+    "src_jsonl_roundtrip": src_jsonl_roundtrip,
+    "src_orc_roundtrip": src_orc_roundtrip,
+    "src_binary_ingest": src_binary_ingest,
+    "j16_point_in_time_join": j16_point_in_time_join,
+    "o8_reservoir_sample": o8_reservoir_sample,
+    "q_schema_drift": q_schema_drift,
+    "src_xml_roundtrip": src_xml_roundtrip,
+}
+
+ORACLES = {
+    "src_wds_roundtrip": SRC_WDS_ORACLE,
+    "src_jsonl_roundtrip": SRC_JSONL_ORACLE,
+    "src_orc_roundtrip": SRC_ORC_ORACLE,
+    "src_binary_ingest": _binary_oracle,
+    "j16_point_in_time_join": J16_ORACLE,
+    "o8_reservoir_sample": O8_RESERVOIR_ORACLE,
+    "q_schema_drift": Q_SCHEMA_DRIFT_ORACLE,
+    "src_xml_roundtrip": SRC_XML_ORACLE,
+}

@@ -1,22 +1,14 @@
 """Deduplication queries (dd_*): exact/minhash/simhash/containment/incremental tiers.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/llm.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+The module owns its catalog entries (``QUERIES``/``ORACLES`` at the end).
+See the package ``__init__`` for the cross-engine determinism contract.
 """
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-import pandas as pd
-from us_dot_flights_lakehouse_spark.llm import (
-    curation,
-    dedup,
-    multimodal,
-    similarity,
-    textstats,
-    tokenizer,
-)
+from us_dot_flights_lakehouse_spark.llm import curation, dedup
 from us_dot_flights_lakehouse_spark.llm.dedup import (
     MINHASH_A,
     MINHASH_B,
@@ -26,11 +18,7 @@ from us_dot_flights_lakehouse_spark.llm.dedup import (
     SIMHASH_BANDS,
     SIMHASH_BITS,
 )
-from us_dot_flights_lakehouse_spark.functions.text import (
-    hash28,
-    shingles,
-    tokenize,
-)
+from us_dot_flights_lakehouse_spark.functions.text import shingles, tokenize
 from us_dot_flights_lakehouse_spark.sources.readers import read_corpus, read_table
 
 from us_dot_flights_lakehouse_spark.queries.llm_shared import (
@@ -470,6 +458,64 @@ FROM grid g
 JOIN measured m
   ON g.bands = m.bands AND g.rows_per_band = m.rows_per_band
 CROSS JOIN np
+"""
+
+
+DD_INCR_CLUSTERS_ORACLE = f"""
+WITH RECURSIVE pairs AS ({DD_MINHASH_ORACLE}),
+hist_edges AS (
+  SELECT doc_id_a AS x, doc_id_b AS y FROM pairs
+  WHERE doc_id_a < {INCR_HISTORY_CUTOFF} AND doc_id_b < {INCR_HISTORY_CUTOFF}
+  UNION ALL
+  SELECT doc_id_b, doc_id_a FROM pairs
+  WHERE doc_id_a < {INCR_HISTORY_CUTOFF} AND doc_id_b < {INCR_HISTORY_CUTOFF}
+),
+hist_reach AS (
+  SELECT doc_id AS src, doc_id AS dst FROM documents
+  WHERE doc_id < {INCR_HISTORY_CUTOFF}
+  UNION
+  SELECT r.src, e.y FROM hist_reach r JOIN hist_edges e ON r.dst = e.x
+),
+hist_labels AS (
+  SELECT src AS hist_id, MIN(dst) AS hist_lbl FROM hist_reach GROUP BY src
+),
+batch_edges AS (
+  SELECT doc_id_a AS x, doc_id_b AS y FROM pairs
+  WHERE doc_id_a >= {INCR_HISTORY_CUTOFF} AND doc_id_b >= {INCR_HISTORY_CUTOFF}
+  UNION ALL
+  SELECT doc_id_b, doc_id_a FROM pairs
+  WHERE doc_id_a >= {INCR_HISTORY_CUTOFF} AND doc_id_b >= {INCR_HISTORY_CUTOFF}
+),
+batch_reach AS (
+  SELECT doc_id AS src, doc_id AS dst FROM documents
+  WHERE doc_id >= {INCR_HISTORY_CUTOFF}
+  UNION
+  SELECT r.src, e.y FROM batch_reach r JOIN batch_edges e ON r.dst = e.x
+),
+batch_cc AS (
+  SELECT src AS doc_id, MIN(dst) AS comp FROM batch_reach GROUP BY src
+),
+cross_links AS (
+  SELECT doc_id_b AS batch_id, doc_id_a AS hist_id FROM pairs
+  WHERE doc_id_a < {INCR_HISTORY_CUTOFF} AND doc_id_b >= {INCR_HISTORY_CUTOFF}
+  UNION ALL
+  SELECT doc_id_a, doc_id_b FROM pairs
+  WHERE doc_id_a >= {INCR_HISTORY_CUTOFF} AND doc_id_b < {INCR_HISTORY_CUTOFF}
+),
+linked AS (
+  SELECT bc.comp,
+         CAST(MIN(hl.hist_lbl) AS BIGINT) AS min_hist_lbl,
+         CAST(COUNT(DISTINCT hl.hist_lbl) AS BIGINT) AS n_hist
+  FROM cross_links c
+  JOIN hist_labels hl ON c.hist_id = hl.hist_id
+  JOIN batch_cc bc ON c.batch_id = bc.doc_id
+  GROUP BY bc.comp
+)
+SELECT b.doc_id,
+       CAST(COALESCE(l.min_hist_lbl, b.comp) AS BIGINT) AS cluster_label,
+       l.min_hist_lbl IS NOT NULL AS attached_to_history,
+       CAST(COALESCE(l.n_hist, 0) AS BIGINT) AS n_history_clusters_touched
+FROM batch_cc b LEFT JOIN linked l ON b.comp = l.comp
 """
 
 
@@ -1895,3 +1941,64 @@ SELECT b.src_a, b.src_b, b.n_inter, b.n_union,
          - CAST(b.n_inter AS DOUBLE) / CAST(b.n_union AS DOUBLE) AS jac_err
 FROM base b JOIN sk s ON s.src_a = b.src_a AND s.src_b = b.src_b
 """
+
+
+QUERIES = {
+    "dd_exact_dedup": dd_exact_dedup,
+    "dd_ngram_jaccard": dd_ngram_jaccard,
+    "dd_containment": dd_containment,
+    "dd_minhash_lsh": dd_minhash_lsh,
+    "dd_simhash_values": dd_simhash_values,
+    "dd_simhash_pairs": dd_simhash_pairs,
+    "dd_embedding_neardup": dd_embedding_neardup,
+    "dd_incremental_minhash": dd_incremental_minhash,
+    "dd_lsh_tuning_curve": dd_lsh_tuning_curve,
+    "dd_incremental_clusters": dd_incremental_clusters,
+    "dd_dup_clusters": dd_dup_clusters,
+    "dd_line_dedup": dd_line_dedup,
+    "dd_semantic_dedup": dd_semantic_dedup,
+    "dd_url_canonical": dd_url_canonical,
+    "dd_prefix_clusters": dd_prefix_clusters,
+    "dd_cluster_keep_best": dd_cluster_keep_best,
+    "dd_minhash_calibration": dd_minhash_calibration,
+    "dd_threshold_sweep": dd_threshold_sweep,
+    "dd_source_dedup_report": dd_source_dedup_report,
+    "dd_pipeline_verdict": dd_pipeline_verdict,
+    "dd_exact_substr": dd_exact_substr,
+    "dd_span_dedup_apply": dd_span_dedup_apply,
+    "dd_soft_dedup_weights": dd_soft_dedup_weights,
+    "dd_shingle_df_profile": dd_shingle_df_profile,
+    "dd_corpus_snapshot_diff": dd_corpus_snapshot_diff,
+    "dd_incremental_span_probe": dd_incremental_span_probe,
+    "dd_kmv_source_overlap": dd_kmv_source_overlap,
+}
+
+ORACLES = {
+    "dd_exact_dedup": DD_EXACT_ORACLE,
+    "dd_ngram_jaccard": DD_NGRAM_ORACLE,
+    "dd_containment": DD_CONTAIN_ORACLE,
+    "dd_minhash_lsh": DD_MINHASH_ORACLE,
+    "dd_simhash_values": _simhash_oracle(),
+    "dd_simhash_pairs": _simhash_pairs_oracle(),
+    "dd_embedding_neardup": DD_EMB_ORACLE,
+    "dd_incremental_minhash": _dd_incr_minhash_oracle(),
+    "dd_lsh_tuning_curve": _lsh_tuning_oracle(),
+    "dd_incremental_clusters": DD_INCR_CLUSTERS_ORACLE,
+    "dd_dup_clusters": DD_CLUSTERS_ORACLE,
+    "dd_line_dedup": DD_LINE_ORACLE,
+    "dd_semantic_dedup": DD_SEMANTIC_ORACLE,
+    "dd_url_canonical": DD_URL_ORACLE,
+    "dd_prefix_clusters": DD_PREFIX_ORACLE,
+    "dd_cluster_keep_best": DD_KEEPBEST_ORACLE,
+    "dd_minhash_calibration": _minhash_cal_oracle,
+    "dd_threshold_sweep": _dd_sweep_oracle,
+    "dd_source_dedup_report": _dd_source_report_oracle,
+    "dd_pipeline_verdict": _dd_pipeline_oracle,
+    "dd_exact_substr": _dd_exact_substr_oracle,
+    "dd_span_dedup_apply": _dd_span_apply_oracle,
+    "dd_soft_dedup_weights": DD_SOFT_DEDUP_ORACLE,
+    "dd_shingle_df_profile": DD_SHINGLE_DF_ORACLE,
+    "dd_corpus_snapshot_diff": DD_CORPUS_DIFF_ORACLE,
+    "dd_incremental_span_probe": DD_INCR_SPAN_ORACLE,
+    "dd_kmv_source_overlap": DD_KMV_OVERLAP_ORACLE,
+}

@@ -1,37 +1,16 @@
 """Scalar-function suites (f_*) and projection/sampling/ordering ops (p*, o*, s*).
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/relational.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+The module owns its catalog entries (``QUERIES``/``ORACLES`` at the end).
+See the package ``__init__`` for the cross-engine determinism contract.
 """
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
-from us_dot_flights_lakehouse_spark.operators.aggregates import (
-    MONEY,
-    conditional_avg,
-    conditional_count,
-    cube_agg,
-    dec_sum,
-    rollup_agg,
-)
+from us_dot_flights_lakehouse_spark.operators.aggregates import conditional_count
 from us_dot_flights_lakehouse_spark.operators.generators import date_range_df
-from us_dot_flights_lakehouse_spark.operators.joins import (
-    asof_join,
-    broadcast_star_join,
-    bucketed_range_join,
-    enrich_join,
-    outer_merge_coalesce,
-    semi_join,
-)
-from us_dot_flights_lakehouse_spark.operators.setops import (
-    except_distinct,
-    intersect_distinct,
-    union_distinct,
-)
 from us_dot_flights_lakehouse_spark.sources.readers import (
-    lookup_scan,
     read_corpus,
     read_table,
     spread_scan,
@@ -611,7 +590,7 @@ def p7_try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7 (extension): error-safe expressions — try_cast, try_divide,
     try_to_number: malformed input yields NULL instead of failing the
     job (the row-level analogue of the corrupt-record quarantine in
-    sources/readers.py::read_csv_robust).
+    ``src_csv_badrecords``).
 
     The try_cast probe mixes numeric strings (even keys) with the letter
     statuses (odd keys) so the column carries BOTH parsed values and
@@ -1286,3 +1265,70 @@ SELECT o_orderkey, o_orderdate, rank FROM (
   FROM orders
 ) WHERE rank % {O10_EVERY_K} = 0
 """
+
+
+QUERIES = {
+    "o3_date_dim": o3_date_dim,
+    "p4_conditional_cleaning": p4_conditional_cleaning,
+    "f_string_suite": f_string_suite,
+    "f_datetime_suite": f_datetime_suite,
+    "f_json_suite": f_json_suite,
+    "f_array_suite": f_array_suite,
+    "s1_deterministic_sample": s1_deterministic_sample,
+    "f_map_suite": f_map_suite,
+    "p5_null_handling": p5_null_handling,
+    "f_explode_suite": f_explode_suite,
+    "p6_grouped_minmax_scale": p6_grouped_minmax_scale,
+    "f_udtf_shingles": f_udtf_shingles,
+    "f_variant_suite": f_variant_suite,
+    "o4_recursive_month_spine": o4_recursive_month_spine,
+    "f_datetime_suite2": f_datetime_suite2,
+    "f_array_suite2": f_array_suite2,
+    "p7_try_functions": p7_try_functions,
+    "f_string_suite2": f_string_suite2,
+    "f_xml_suite": f_xml_suite,
+    "p8_winsorize": p8_winsorize,
+    "o5_benford_audit": o5_benford_audit,
+    "p9_standardize": p9_standardize,
+    "o7_id_continuity": o7_id_continuity,
+    "ts_readability": ts_readability,
+    "src_csv_badrecords": src_csv_badrecords,
+    "o9_dense_rank_ids": o9_dense_rank_ids,
+    "f_sql_udf": f_sql_udf,
+    "f_param_sql": f_param_sql,
+    "f_udtf_partitioned": f_udtf_partitioned,
+    "o10_systematic_sample": o10_systematic_sample,
+}
+
+ORACLES = {
+    "o3_date_dim": O3_ORACLE,
+    "p4_conditional_cleaning": P4_ORACLE,
+    "f_string_suite": F_STRING_ORACLE,
+    "f_datetime_suite": F_DATETIME_ORACLE,
+    "f_json_suite": F_JSON_ORACLE,
+    "f_array_suite": F_ARRAY_ORACLE,
+    "s1_deterministic_sample": S1_ORACLE,
+    "f_map_suite": F_MAP_ORACLE,
+    "p5_null_handling": P5_ORACLE,
+    "f_explode_suite": F_EXPLODE_ORACLE,
+    "p6_grouped_minmax_scale": P6_ORACLE,
+    "f_udtf_shingles": F_UDTF_ORACLE,
+    "f_variant_suite": F_VARIANT_ORACLE,
+    "o4_recursive_month_spine": O4_ORACLE,
+    "f_datetime_suite2": F_DATETIME2_ORACLE,
+    "f_array_suite2": F_ARRAY2_ORACLE,
+    "p7_try_functions": P7_ORACLE,
+    "f_string_suite2": F_STRING2_ORACLE,
+    "f_xml_suite": F_XML_ORACLE,
+    "p8_winsorize": P8_ORACLE,
+    "o5_benford_audit": _benford_oracle,
+    "p9_standardize": P9_ORACLE,
+    "o7_id_continuity": O7_ORACLE,
+    "ts_readability": TS_READ_ORACLE,
+    "src_csv_badrecords": SRC_BADREC_ORACLE,
+    "o9_dense_rank_ids": O9_ORACLE,
+    "f_sql_udf": F_SQL_UDF_ORACLE,
+    "f_param_sql": F_PARAM_SQL_ORACLE,
+    "f_udtf_partitioned": F_UDTF2_ORACLE,
+    "o10_systematic_sample": O10_ORACLE,
+}

@@ -1,22 +1,14 @@
 """Join / graph / set-op queries (j*, g*, u*): equi/asof/skew joins, graph ops.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/relational.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+The module owns its catalog entries (``QUERIES``/``ORACLES`` at the end).
+See the package ``__init__`` for the cross-engine determinism contract.
 """
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
-from us_dot_flights_lakehouse_spark.operators.aggregates import (
-    MONEY,
-    conditional_avg,
-    conditional_count,
-    cube_agg,
-    dec_sum,
-    rollup_agg,
-)
-from us_dot_flights_lakehouse_spark.operators.generators import date_range_df
+from us_dot_flights_lakehouse_spark.operators.aggregates import dec_sum
 from us_dot_flights_lakehouse_spark.operators.physical import bounded_arrow
 from us_dot_flights_lakehouse_spark.operators.joins import (
     asof_join,
@@ -31,11 +23,7 @@ from us_dot_flights_lakehouse_spark.operators.setops import (
     intersect_distinct,
     union_distinct,
 )
-from us_dot_flights_lakehouse_spark.sources.readers import (
-    lookup_scan,
-    read_corpus,
-    read_table,
-)
+from us_dot_flights_lakehouse_spark.sources.readers import lookup_scan, read_table
 
 
 def j1_enrich_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -653,7 +641,7 @@ RANK_NSALT = 16
 
 def g1_bipartite_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G1: iterative rank propagation over the customer→supplier
-    purchase graph (PageRank's update rule, {RANK_ITERS} rounds on the
+    purchase graph (PageRank's update rule, two rounds on the
     bipartite edge set from lineitem⋈orders): supplier_rank = 0.15 +
     {RANK_DAMP}·Σ cust_rank/outdeg, then customers re-score from
     supplier ranks the same way. Float sums over a graph are
@@ -1175,13 +1163,18 @@ def g3_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _g3_oracle() -> str:
+    # MATERIALIZED evaluates each peel round once: e{r} reads e{r-1} three
+    # times (directly and through deg/drop), and DuckDB inlining those
+    # references re-ran the earlier rounds (4 threads: 3.6 s and over
+    # 4 GB at sf0.001, out of memory at sf0.1; materialized, 0.04 s and
+    # 1.4 s under a 4 GB cap)
     peel = """
-, deg{r} AS (
+, deg{r} AS MATERIALIZED (
   SELECT v, count(*) AS d FROM (
     SELECT a AS v FROM e{p} UNION ALL SELECT b AS v FROM e{p}
   ) GROUP BY 1
-), drop{r} AS (SELECT v FROM deg{r} WHERE d < {K})
-, e{r} AS (
+), drop{r} AS MATERIALIZED (SELECT v FROM deg{r} WHERE d < {K})
+, e{r} AS MATERIALIZED (
   SELECT a, b FROM e{p}
   WHERE a NOT IN (SELECT v FROM drop{r})
     AND b NOT IN (SELECT v FROM drop{r})
@@ -1580,3 +1573,56 @@ JOIN deg db ON p.supp_b = db.supp
 ORDER BY p.n_shared DESC, p.supp_a ASC, p.supp_b ASC
 LIMIT {G5_TOPK}
 """
+
+
+QUERIES = {
+    "j1_enrich_lookup_join": j1_enrich_lookup_join,
+    "j2_star_fact_build": j2_star_fact_build,
+    "j4_outer_merge_daily_flow": j4_outer_merge_daily_flow,
+    "j7_anti_customers_without_orders": j7_anti_customers_without_orders,
+    "u1_union_distinct_nations": u1_union_distinct_nations,
+    "j6_semi_high_value_customers": j6_semi_high_value_customers,
+    "u2_intersect_except_nations": u2_intersect_except_nations,
+    "j8_asof_purchase_attribution": j8_asof_purchase_attribution,
+    "j9_range_join_price_bands": j9_range_join_price_bands,
+    "j10_regional_revenue": j10_regional_revenue,
+    "j11_clickstream_interval_join": j11_clickstream_interval_join,
+    "j12_lateral_topk_orders": j12_lateral_topk_orders,
+    "u4_union_schema_evolution": u4_union_schema_evolution,
+    "u3_multiset_ops": u3_multiset_ops,
+    "dd_fuzzy_name_pairs": dd_fuzzy_name_pairs,
+    "j13_nullsafe_join": j13_nullsafe_join,
+    "g1_bipartite_rank": g1_bipartite_rank,
+    "j17_interval_align": j17_interval_align,
+    "g2_triangle_count": g2_triangle_count,
+    "g3_kcore_decompose": g3_kcore_decompose,
+    "g4_label_propagation": g4_label_propagation,
+    "j18_salted_skew_join": j18_salted_skew_join,
+    "g5_neighbor_overlap": g5_neighbor_overlap,
+}
+
+ORACLES = {
+    "j1_enrich_lookup_join": J1_ORACLE,
+    "j2_star_fact_build": J2_ORACLE,
+    "j4_outer_merge_daily_flow": J4_ORACLE,
+    "j7_anti_customers_without_orders": J7_ORACLE,
+    "u1_union_distinct_nations": U1_ORACLE,
+    "j6_semi_high_value_customers": J6_ORACLE,
+    "u2_intersect_except_nations": U2_ORACLE,
+    "j8_asof_purchase_attribution": J8_ORACLE,
+    "j9_range_join_price_bands": J9_ORACLE,
+    "j10_regional_revenue": J10_ORACLE,
+    "j11_clickstream_interval_join": J11_ORACLE,
+    "j12_lateral_topk_orders": J12_ORACLE,
+    "u4_union_schema_evolution": U4_ORACLE,
+    "u3_multiset_ops": U3_ORACLE,
+    "dd_fuzzy_name_pairs": DD_FUZZY_ORACLE,
+    "j13_nullsafe_join": J13_ORACLE,
+    "g1_bipartite_rank": G1_ORACLE,
+    "j17_interval_align": J17_ORACLE,
+    "g2_triangle_count": G2_ORACLE,
+    "g3_kcore_decompose": _g3_oracle(),
+    "g4_label_propagation": _g4_oracle(),
+    "j18_salted_skew_join": J18_ORACLE,
+    "g5_neighbor_overlap": G5_ORACLE,
+}

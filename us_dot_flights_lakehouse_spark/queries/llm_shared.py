@@ -1,37 +1,13 @@
 """Shared constants and helpers for the LLM-pipeline query family modules.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/llm.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+Oracles for MinHash/SimHash are generated from the same constants the
+Spark operators use (llm/dedup.py), so the two sides cannot drift; the
+shared 28-bit md5 hash contract is described in functions/text.py.
+See the package ``__init__`` for the cross-engine determinism contract.
 """
 
 from __future__ import annotations
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window
-from pyspark.sql import functions as F
-import pandas as pd
-from us_dot_flights_lakehouse_spark.llm import (
-    curation,
-    dedup,
-    multimodal,
-    similarity,
-    textstats,
-    tokenizer,
-)
-from us_dot_flights_lakehouse_spark.llm.dedup import (
-    MINHASH_A,
-    MINHASH_B,
-    MINHASH_BANDS,
-    MINHASH_K,
-    MINHASH_PRIME,
-    SIMHASH_BANDS,
-    SIMHASH_BITS,
-)
-from us_dot_flights_lakehouse_spark.functions.text import (
-    hash28,
-    shingles,
-    tokenize,
-)
-from us_dot_flights_lakehouse_spark.sources.readers import read_corpus, read_table
+from us_dot_flights_lakehouse_spark.llm import similarity
 
 
 def _duck_doubles(vals) -> str:
@@ -82,67 +58,4 @@ def _lsh_planes_sql(
 INCR_HISTORY_CUTOFF = 250
 
 
-DD_INCR_CLUSTERS_ORACLE = f"""
-WITH RECURSIVE pairs AS ({{minhash_pairs}}),
-hist_edges AS (
-  SELECT doc_id_a AS x, doc_id_b AS y FROM pairs
-  WHERE doc_id_a < {INCR_HISTORY_CUTOFF} AND doc_id_b < {INCR_HISTORY_CUTOFF}
-  UNION ALL
-  SELECT doc_id_b, doc_id_a FROM pairs
-  WHERE doc_id_a < {INCR_HISTORY_CUTOFF} AND doc_id_b < {INCR_HISTORY_CUTOFF}
-),
-hist_reach AS (
-  SELECT doc_id AS src, doc_id AS dst FROM documents
-  WHERE doc_id < {INCR_HISTORY_CUTOFF}
-  UNION
-  SELECT r.src, e.y FROM hist_reach r JOIN hist_edges e ON r.dst = e.x
-),
-hist_labels AS (
-  SELECT src AS hist_id, MIN(dst) AS hist_lbl FROM hist_reach GROUP BY src
-),
-batch_edges AS (
-  SELECT doc_id_a AS x, doc_id_b AS y FROM pairs
-  WHERE doc_id_a >= {INCR_HISTORY_CUTOFF} AND doc_id_b >= {INCR_HISTORY_CUTOFF}
-  UNION ALL
-  SELECT doc_id_b, doc_id_a FROM pairs
-  WHERE doc_id_a >= {INCR_HISTORY_CUTOFF} AND doc_id_b >= {INCR_HISTORY_CUTOFF}
-),
-batch_reach AS (
-  SELECT doc_id AS src, doc_id AS dst FROM documents
-  WHERE doc_id >= {INCR_HISTORY_CUTOFF}
-  UNION
-  SELECT r.src, e.y FROM batch_reach r JOIN batch_edges e ON r.dst = e.x
-),
-batch_cc AS (
-  SELECT src AS doc_id, MIN(dst) AS comp FROM batch_reach GROUP BY src
-),
-cross_links AS (
-  SELECT doc_id_b AS batch_id, doc_id_a AS hist_id FROM pairs
-  WHERE doc_id_a < {INCR_HISTORY_CUTOFF} AND doc_id_b >= {INCR_HISTORY_CUTOFF}
-  UNION ALL
-  SELECT doc_id_a, doc_id_b FROM pairs
-  WHERE doc_id_a >= {INCR_HISTORY_CUTOFF} AND doc_id_b < {INCR_HISTORY_CUTOFF}
-),
-linked AS (
-  SELECT bc.comp,
-         CAST(MIN(hl.hist_lbl) AS BIGINT) AS min_hist_lbl,
-         CAST(COUNT(DISTINCT hl.hist_lbl) AS BIGINT) AS n_hist
-  FROM cross_links c
-  JOIN hist_labels hl ON c.hist_id = hl.hist_id
-  JOIN batch_cc bc ON c.batch_id = bc.doc_id
-  GROUP BY bc.comp
-)
-SELECT b.doc_id,
-       CAST(COALESCE(l.min_hist_lbl, b.comp) AS BIGINT) AS cluster_label,
-       l.min_hist_lbl IS NOT NULL AS attached_to_history,
-       CAST(COALESCE(l.n_hist, 0) AS BIGINT) AS n_history_clusters_touched
-FROM batch_cc b LEFT JOIN linked l ON b.comp = l.comp
-"""
-
-
 FH_DIM = 64
-
-
-#: lint rule bits (LSB first): empty turn, adjacent duplicate turns,
-#: over budget, incomplete conversation, template-tag leakage
-CHAT_LINT_BITS = 5

@@ -1,7 +1,7 @@
 """Multimodal queries (mm_*): image/audio/video decode, features, frame analytics.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/llm.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+The module owns its catalog entries (``QUERIES``/``ORACLES`` at the end).
+See the package ``__init__`` for the cross-engine determinism contract.
 """
 
 from __future__ import annotations
@@ -9,28 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 import pandas as pd
-from us_dot_flights_lakehouse_spark.llm import (
-    curation,
-    dedup,
-    multimodal,
-    similarity,
-    textstats,
-    tokenizer,
-)
-from us_dot_flights_lakehouse_spark.llm.dedup import (
-    MINHASH_A,
-    MINHASH_B,
-    MINHASH_BANDS,
-    MINHASH_K,
-    MINHASH_PRIME,
-    SIMHASH_BANDS,
-    SIMHASH_BITS,
-)
-from us_dot_flights_lakehouse_spark.functions.text import (
-    hash28,
-    shingles,
-    tokenize,
-)
+from us_dot_flights_lakehouse_spark.llm import multimodal
 from us_dot_flights_lakehouse_spark.sources.readers import read_corpus, read_table
 
 
@@ -1514,13 +1493,22 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = multimodal.dhash_image(
         multimodal.resize_image(imgs, 8, 8, method="box")
     )
-    # r14 (guide §2.4): the old groupBy(dhash)+self-join consumed
-    # ``hashed`` twice — and each consumer re-ran the full synth → resize
-    # → dhash Python kernel chain (the plan had two ArrowEval chains).
-    # min(id) OVER (PARTITION BY dhash) computes the identical
-    # cluster_min in ONE pass over one kernel chain with the same single
-    # dhash exchange. Interleaved A/B 2.2 -> 1.2 s at sf0.1.
-    cluster_min = F.min("id").over(Window.partitionBy("dhash"))
+    return phash_clusters(hashed)
+
+
+def phash_clusters(hashed: DataFrame) -> DataFrame:
+    """(id, dhash) -> (doc_id, dhash, cluster_min, is_dup): rows with an
+    equal dhash form one cluster named by its smallest id, and every
+    other member is a dup. A NULL dhash (a row ``dhash_image``'s codec
+    gate rejected) is no evidence of a duplicate, so that row is its own
+    singleton: cluster_min = doc_id, is_dup = false.
+
+    min(id) OVER (PARTITION BY dhash) is one pass over one kernel chain
+    with a single dhash exchange; a groupBy + self-join would consume
+    ``hashed`` twice and re-run the whole synth → resize → dhash chain."""
+    cluster_min = F.when(F.col("dhash").isNull(), F.col("id")).otherwise(
+        F.min("id").over(Window.partitionBy("dhash"))
+    )
     return hashed.select(
         F.col("id").alias("doc_id"),
         "dhash",
@@ -2145,3 +2133,66 @@ SELECT doc_id,
        CAST(max(m) AS BIGINT) AS max_after
 FROM mapped GROUP BY doc_id
 """
+
+
+QUERIES = {
+    "mm_media_manifest": mm_media_manifest,
+    "mm_byte_features": mm_byte_features,
+    "mm_image_dims": mm_image_dims,
+    "mm_pixel_stats": mm_pixel_stats,
+    "mm_image_resize": mm_image_resize,
+    "mm_image_augment": mm_image_augment,
+    "mm_image_crop": mm_image_crop,
+    "mm_jpeg_roundtrip": mm_jpeg_roundtrip,
+    "mm_frame_stats": mm_frame_stats,
+    "mm_audio_resample": mm_audio_resample,
+    "mm_video_motion": mm_video_motion,
+    "mm_scene_cuts": mm_scene_cuts,
+    "mm_frame_dedup": mm_frame_dedup,
+    "mm_mjpeg_frame_stats": mm_mjpeg_frame_stats,
+    "mm_wav_meta": mm_wav_meta,
+    "mm_gif_roundtrip": mm_gif_roundtrip,
+    "mm_mp4_frame_stats": mm_mp4_frame_stats,
+    "mm_audio_stats": mm_audio_stats,
+    "mm_audio_spectral": mm_audio_spectral,
+    "mm_mp4_meta": mm_mp4_meta,
+    "mm_phash_dedup": mm_phash_dedup,
+    "mm_silence_trim": mm_silence_trim,
+    "mm_patchify": mm_patchify,
+    "mm_image_norm": mm_image_norm,
+    "mm_audio_vad_segments": mm_audio_vad_segments,
+    "mm_exif_strip": mm_exif_strip,
+    "mm_audio_normalize_audit": mm_audio_normalize_audit,
+    "mm_hist_equalize": mm_hist_equalize,
+}
+
+ORACLES = {
+    "mm_media_manifest": _mm_manifest_oracle(),
+    "mm_byte_features": MM_BYTES_ORACLE,
+    "mm_image_dims": MM_DIMS_ORACLE,
+    "mm_pixel_stats": MM_PIXEL_ORACLE,
+    "mm_image_resize": MM_RESIZE_ORACLE,
+    "mm_image_augment": MM_AUGMENT_ORACLE,
+    "mm_image_crop": MM_CROP_ORACLE,
+    "mm_jpeg_roundtrip": MM_JPEG_ORACLE,
+    "mm_frame_stats": MM_FRAME_ORACLE,
+    "mm_audio_resample": MM_RESAMPLE_ORACLE,
+    "mm_video_motion": MM_MOTION_ORACLE,
+    "mm_scene_cuts": MM_SCENE_CUTS_ORACLE,
+    "mm_frame_dedup": _frame_dedup_oracle(),
+    "mm_mjpeg_frame_stats": MM_MJPEG_ORACLE,
+    "mm_wav_meta": MM_WAV_ORACLE,
+    "mm_gif_roundtrip": MM_GIF_ORACLE,
+    "mm_mp4_frame_stats": MM_MP4_FRAMES_ORACLE,
+    "mm_audio_stats": MM_AUDIO_ORACLE,
+    "mm_audio_spectral": MM_SPECTRAL_ORACLE,
+    "mm_mp4_meta": MM_MP4_ORACLE,
+    "mm_phash_dedup": _phash_oracle,
+    "mm_silence_trim": MM_SILENCE_ORACLE,
+    "mm_patchify": _patchify_oracle,
+    "mm_image_norm": MM_IMGNORM_ORACLE,
+    "mm_audio_vad_segments": MM_VAD_ORACLE,
+    "mm_exif_strip": MM_EXIF_ORACLE,
+    "mm_audio_normalize_audit": MM_AUDIO_NORM_ORACLE,
+    "mm_hist_equalize": MM_HIST_EQ_ORACLE,
+}

@@ -1,36 +1,15 @@
 """Similarity-search queries (sim_*): ANN indexes, recall audits, embedding analytics.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/llm.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+The module owns its catalog entries (``QUERIES``/``ORACLES`` at the end).
+See the package ``__init__`` for the cross-engine determinism contract.
 """
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-import pandas as pd
-from us_dot_flights_lakehouse_spark.llm import (
-    curation,
-    dedup,
-    multimodal,
-    similarity,
-    textstats,
-    tokenizer,
-)
-from us_dot_flights_lakehouse_spark.llm.dedup import (
-    MINHASH_A,
-    MINHASH_B,
-    MINHASH_BANDS,
-    MINHASH_K,
-    MINHASH_PRIME,
-    SIMHASH_BANDS,
-    SIMHASH_BITS,
-)
-from us_dot_flights_lakehouse_spark.functions.text import (
-    hash28,
-    shingles,
-    tokenize,
-)
+from us_dot_flights_lakehouse_spark.llm import similarity
+from us_dot_flights_lakehouse_spark.functions.text import tokenize
 from us_dot_flights_lakehouse_spark.operators.physical import bounded_arrow, cached
 from us_dot_flights_lakehouse_spark.sources.readers import read_corpus, read_table
 
@@ -606,8 +585,7 @@ def sim_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition by doc_id, which satisfies BOTH downstream groupings
     ((doc, bucket) ⊇ doc), so neither aggregate re-shuffles. The vector
     serializes to a CSV string in the final select — the driver's
-    canonicalizer requires scalar cells (see queries/relational.py's
-    harness note) — with full fidelity: every component, in order,
+    canonicalizer requires scalar cells — with full fidelity: every component, in order,
     exact integers. The fixed dimensionality regardless of vocabulary
     is the point at 100 TB: no vocab table, bounded state (≤{FH_DIM}
     rows/doc after the map-side combine), stream-friendly."""
@@ -1956,3 +1934,60 @@ SELECT cos_bucket, n_pairs,
        CAST(n_pairs AS DOUBLE) / CAST(t AS DOUBLE) AS pair_share
 FROM hist CROSS JOIN tot
 """
+
+
+QUERIES = {
+    "sim_topk_cosine": sim_topk_cosine,
+    "sim_mips_topk": sim_mips_topk,
+    "sim_hard_negatives": sim_hard_negatives,
+    "sim_ivf_topk": sim_ivf_topk,
+    "sim_pq_topk": sim_pq_topk,
+    "sim_random_projection": sim_random_projection,
+    "sim_lsh_topk": sim_lsh_topk,
+    "sim_lsh_multiprobe": sim_lsh_multiprobe,
+    "sim_lsh_recall_audit": sim_lsh_recall_audit,
+    "sim_quantize_int8": sim_quantize_int8,
+    "sim_feature_hash": sim_feature_hash,
+    "sim_knn_accuracy": sim_knn_accuracy,
+    "sim_label_centroids": sim_label_centroids,
+    "sim_ivf_recall_audit": sim_ivf_recall_audit,
+    "sim_kmeans_inertia": sim_kmeans_inertia,
+    "sim_index_drift": sim_index_drift,
+    "sim_kcenter_diversity": sim_kcenter_diversity,
+    "sim_pq_recall_audit": sim_pq_recall_audit,
+    "sim_ndcg_eval": sim_ndcg_eval,
+    "sim_matryoshka_truncation": sim_matryoshka_truncation,
+    "sim_intrinsic_dimension": sim_intrinsic_dimension,
+    "sim_fisher_separability": sim_fisher_separability,
+    "sim_power_iteration": sim_power_iteration,
+    "sim_cur_decomposition": sim_cur_decomposition,
+    "sim_distance_histogram": sim_distance_histogram,
+}
+
+ORACLES = {
+    "sim_topk_cosine": SIM_TOPK_ORACLE,
+    "sim_mips_topk": SIM_MIPS_ORACLE,
+    "sim_hard_negatives": SIM_HARDNEG_ORACLE,
+    "sim_ivf_topk": _ivf_oracle,
+    "sim_pq_topk": _pq_oracle,
+    "sim_random_projection": _rp_oracle,
+    "sim_lsh_topk": SIM_LSH_ORACLE,
+    "sim_lsh_multiprobe": SIM_LSH_MP_ORACLE,
+    "sim_lsh_recall_audit": _lsh_recall_oracle(),
+    "sim_quantize_int8": SIM_QUANT_ORACLE,
+    "sim_feature_hash": SIM_FH_ORACLE,
+    "sim_knn_accuracy": SIM_KNN_ORACLE,
+    "sim_label_centroids": SIM_CENTROID_ORACLE,
+    "sim_ivf_recall_audit": _ivf_recall_oracle,
+    "sim_kmeans_inertia": _kmeans_inertia_oracle,
+    "sim_index_drift": _index_drift_oracle,
+    "sim_kcenter_diversity": _kcenter_oracle,
+    "sim_pq_recall_audit": _pq_recall_oracle,
+    "sim_ndcg_eval": _ndcg_oracle,
+    "sim_matryoshka_truncation": _matryoshka_oracle,
+    "sim_intrinsic_dimension": SIM_INTRINSIC_ORACLE,
+    "sim_fisher_separability": SIM_FISHER_ORACLE,
+    "sim_power_iteration": _power_iteration_oracle,
+    "sim_cur_decomposition": SIM_CUR_ORACLE,
+    "sim_distance_histogram": SIM_DIST_HIST_ORACLE,
+}

@@ -1,46 +1,20 @@
 """Mergeable-sketch queries: KLL/MG/KMV families, sketch marts, advisors.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/relational.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+The module owns its catalog entries (``QUERIES``/``ORACLES`` at the end).
+See the package ``__init__`` for the cross-engine determinism contract.
 """
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
-from us_dot_flights_lakehouse_spark.operators.aggregates import (
-    MONEY,
-    conditional_avg,
-    conditional_count,
-    cube_agg,
-    dec_sum,
-    rollup_agg,
-)
-from us_dot_flights_lakehouse_spark.operators.generators import date_range_df
+from us_dot_flights_lakehouse_spark.operators.aggregates import dec_sum
 from us_dot_flights_lakehouse_spark.operators.quantiles import (
     collect_value_histogram,
     histogram_groups,
     percentiles_from_counts,
 )
-from us_dot_flights_lakehouse_spark.operators.joins import (
-    asof_join,
-    broadcast_star_join,
-    bucketed_range_join,
-    enrich_join,
-    outer_merge_coalesce,
-    semi_join,
-)
-from us_dot_flights_lakehouse_spark.operators.setops import (
-    except_distinct,
-    intersect_distinct,
-    union_distinct,
-)
-from us_dot_flights_lakehouse_spark.sources.readers import (
-    lookup_scan,
-    read_corpus,
-    read_table,
-    spread_scan,
-)
+from us_dot_flights_lakehouse_spark.sources.readers import read_table, spread_scan
 
 
 def a19_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2840,3 +2814,50 @@ SELECT CAST(bucket AS INTEGER) AS bucket,
        TRUE AS disjoint_ok
 FROM b GROUP BY 1
 """
+
+
+QUERIES = {
+    "a19_sketch_rollup": a19_sketch_rollup,
+    "a38_kll_quantile_sketch": a38_kll_quantile_sketch,
+    "w23_sketch_rolling_quantile": w23_sketch_rolling_quantile,
+    "a39_mg_topk_sketch": a39_mg_topk_sketch,
+    "w24_mg_rolling_topk": w24_mg_rolling_topk,
+    "a40_kmv_distinct_sketch": a40_kmv_distinct_sketch,
+    "w25_kmv_rolling_distinct": w25_kmv_rolling_distinct,
+    "w26_mart_rolling_distinct": w26_mart_rolling_distinct,
+    "o11_universe_sample": o11_universe_sample,
+    "x11_incremental_mart": x11_incremental_mart,
+    "x12_sketch_mart_maintenance": x12_sketch_mart_maintenance,
+    "a41_sampled_kmv_crosscheck": a41_sampled_kmv_crosscheck,
+    "q_groupby_cardinality_advisor": q_groupby_cardinality_advisor,
+    "q_join_cardinality_advisor": q_join_cardinality_advisor,
+    "j19_advised_join": j19_advised_join,
+    "q_join_skew_advisor": q_join_skew_advisor,
+    "j20_skew_advised_join": j20_skew_advised_join,
+    "a42_advised_mart_layout": a42_advised_mart_layout,
+    "q_range_partition_advisor": q_range_partition_advisor,
+    "x13_advised_range_layout": x13_advised_range_layout,
+}
+
+ORACLES = {
+    "a19_sketch_rollup": A19_ORACLE,
+    "a38_kll_quantile_sketch": A38_ORACLE,
+    "w23_sketch_rolling_quantile": W23_ORACLE,
+    "a39_mg_topk_sketch": A39_ORACLE,
+    "w24_mg_rolling_topk": W24_ORACLE,
+    "a40_kmv_distinct_sketch": A40_ORACLE,
+    "w25_kmv_rolling_distinct": W25_ORACLE,
+    "w26_mart_rolling_distinct": W26_ORACLE,
+    "o11_universe_sample": O11_ORACLE,
+    "x11_incremental_mart": X11_ORACLE,
+    "x12_sketch_mart_maintenance": X12_ORACLE,
+    "a41_sampled_kmv_crosscheck": A41_ORACLE,
+    "q_groupby_cardinality_advisor": Q_GROUPBY_ADVISOR_ORACLE,
+    "q_join_cardinality_advisor": Q_JOIN_ADVISOR_ORACLE,
+    "j19_advised_join": J19_ORACLE,
+    "q_join_skew_advisor": Q_JOIN_SKEW_ADVISOR_ORACLE,
+    "j20_skew_advised_join": J20_ORACLE,
+    "a42_advised_mart_layout": A42_ORACLE,
+    "q_range_partition_advisor": Q_RANGE_ADVISOR_ORACLE,
+    "x13_advised_range_layout": X13_ORACLE,
+}

@@ -1,31 +1,14 @@
 """Text-analysis queries (ts_*): quality gates, lang-ID, corpus statistics.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/llm.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+The module owns its catalog entries (``QUERIES``/``ORACLES`` at the end).
+See the package ``__init__`` for the cross-engine determinism contract.
 """
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-import pandas as pd
-from us_dot_flights_lakehouse_spark.llm import (
-    curation,
-    dedup,
-    multimodal,
-    similarity,
-    textstats,
-    tokenizer,
-)
-from us_dot_flights_lakehouse_spark.llm.dedup import (
-    MINHASH_A,
-    MINHASH_B,
-    MINHASH_BANDS,
-    MINHASH_K,
-    MINHASH_PRIME,
-    SIMHASH_BANDS,
-    SIMHASH_BITS,
-)
+from us_dot_flights_lakehouse_spark.llm import curation, textstats
 from us_dot_flights_lakehouse_spark.functions.text import (
     hash28,
     shingles,
@@ -1684,3 +1667,64 @@ GROUP BY line
 ORDER BY df_docs DESC, line ASC
 LIMIT {BOILERPLATE_TOPK}
 """
+
+
+QUERIES = {
+    "ts_text_stats": ts_text_stats,
+    "ts_lang_id": ts_lang_id,
+    "ts_ttr_diversity": ts_ttr_diversity,
+    "ts_heaps_law": ts_heaps_law,
+    "ts_heavy_hitters": ts_heavy_hitters,
+    "ts_pii_scrub": ts_pii_scrub,
+    "ts_tfidf_keywords": ts_tfidf_keywords,
+    "ts_bigram_commonality": ts_bigram_commonality,
+    "ts_quality_filters": ts_quality_filters,
+    "ts_html_extract": ts_html_extract,
+    "ts_ngram_lm": ts_ngram_lm,
+    "ts_countmin_sketch": ts_countmin_sketch,
+    "ts_source_similarity": ts_source_similarity,
+    "ts_quality_classifier": ts_quality_classifier,
+    "ts_url_parse": ts_url_parse,
+    "ts_unicode_normalize": ts_unicode_normalize,
+    "ts_repetition_filters": ts_repetition_filters,
+    "ts_lm_doc_score": ts_lm_doc_score,
+    "ts_novel_ngrams": ts_novel_ngrams,
+    "ts_c4_filters": ts_c4_filters,
+    "ts_char_gini": ts_char_gini,
+    "ts_lang_confusion": ts_lang_confusion,
+    "ts_source_containment": ts_source_containment,
+    "ts_zipf_audit": ts_zipf_audit,
+    "ts_entropy_gates": ts_entropy_gates,
+    "ts_code_detect": ts_code_detect,
+    "ts_boilerplate_lines": ts_boilerplate_lines,
+}
+
+ORACLES = {
+    "ts_text_stats": TS_STATS_ORACLE,
+    "ts_lang_id": _lang_oracle(),
+    "ts_ttr_diversity": TS_TTR_ORACLE,
+    "ts_heaps_law": TS_HEAPS_ORACLE,
+    "ts_heavy_hitters": TS_HH_ORACLE,
+    "ts_pii_scrub": _pii_oracle(),
+    "ts_tfidf_keywords": TS_TFIDF_ORACLE,
+    "ts_bigram_commonality": TS_BIGRAM_ORACLE,
+    "ts_quality_filters": _quality_filters_oracle(),
+    "ts_html_extract": TS_HTML_ORACLE,
+    "ts_ngram_lm": TS_LM_ORACLE,
+    "ts_countmin_sketch": _cm_oracle(),
+    "ts_source_similarity": TS_SRC_SIM_ORACLE,
+    "ts_quality_classifier": _quality_clf_oracle(),
+    "ts_url_parse": TS_URL_ORACLE,
+    "ts_unicode_normalize": TS_UNICODE_ORACLE,
+    "ts_repetition_filters": _repetition_oracle(),
+    "ts_lm_doc_score": TS_LM_SCORE_ORACLE,
+    "ts_novel_ngrams": TS_NOVEL_ORACLE,
+    "ts_c4_filters": TS_C4_ORACLE,
+    "ts_char_gini": TS_GINI_ORACLE,
+    "ts_lang_confusion": _lang_confusion_oracle,
+    "ts_source_containment": TS_SRC_CONTAIN_ORACLE,
+    "ts_zipf_audit": TS_ZIPF_ORACLE,
+    "ts_entropy_gates": _ts_entropy_oracle,
+    "ts_code_detect": TS_CODE_DETECT_ORACLE,
+    "ts_boilerplate_lines": TS_BOILERPLATE_ORACLE,
+}

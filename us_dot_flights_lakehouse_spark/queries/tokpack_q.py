@@ -1,36 +1,21 @@
 """Tokenizer / packing / curation queries (tp_*): BPE, mixes, splits, packing.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/llm.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+The module owns its catalog entries (``QUERIES``/``ORACLES`` at the end).
+See the package ``__init__`` for the cross-engine determinism contract.
 """
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-import pandas as pd
 from us_dot_flights_lakehouse_spark.llm import (
     curation,
     dedup,
-    multimodal,
     similarity,
     textstats,
     tokenizer,
 )
-from us_dot_flights_lakehouse_spark.llm.dedup import (
-    MINHASH_A,
-    MINHASH_B,
-    MINHASH_BANDS,
-    MINHASH_K,
-    MINHASH_PRIME,
-    SIMHASH_BANDS,
-    SIMHASH_BITS,
-)
-from us_dot_flights_lakehouse_spark.functions.text import (
-    hash28,
-    shingles,
-    tokenize,
-)
+from us_dot_flights_lakehouse_spark.functions.text import hash28, tokenize
 from us_dot_flights_lakehouse_spark.sources.readers import read_corpus, read_table
 
 from us_dot_flights_lakehouse_spark.queries.llm_shared import (
@@ -2479,3 +2464,84 @@ FROM scored s
 JOIN sizes c USING (fingerprint)
 JOIN srcw w USING (source)
 """
+
+
+QUERIES = {
+    "tp_label_balance": tp_label_balance,
+    "tp_corpus_curation": tp_corpus_curation,
+    "tp_incremental_dedup": tp_incremental_dedup,
+    "tp_bloom_incremental_dedup": tp_bloom_incremental_dedup,
+    "tp_ranker_auc": tp_ranker_auc,
+    "tp_sequence_packing": tp_sequence_packing,
+    "tp_training_mix": tp_training_mix,
+    "tp_contamination": tp_contamination,
+    "tp_shard_shuffle": tp_shard_shuffle,
+    "tp_curriculum_order": tp_curriculum_order,
+    "tp_dataset_card": tp_dataset_card,
+    "tp_rag_pipeline": tp_rag_pipeline,
+    "tp_bpe_pair_counts": tp_bpe_pair_counts,
+    "tp_token_ids": tp_token_ids,
+    "tp_doc_chunking": tp_doc_chunking,
+    "tp_source_caps": tp_source_caps,
+    "tp_vocab_coverage": tp_vocab_coverage,
+    "tp_temperature_mix": tp_temperature_mix,
+    "tp_span_corruption": tp_span_corruption,
+    "tp_detokenize_roundtrip": tp_detokenize_roundtrip,
+    "tp_length_buckets": tp_length_buckets,
+    "tp_train_val_split": tp_train_val_split,
+    "tp_tokenizer_fertility": tp_tokenizer_fertility,
+    "tp_dsir_weights": tp_dsir_weights,
+    "tp_mixture_epochs": tp_mixture_epochs,
+    "tp_neyman_allocation": tp_neyman_allocation,
+    "tp_sft_format": tp_sft_format,
+    "tp_chat_lint": tp_chat_lint,
+    "tp_loss_masking": tp_loss_masking,
+    "tp_annotation_agreement": tp_annotation_agreement,
+    "tp_bpe_merge_step": tp_bpe_merge_step,
+    "tp_packing_efficiency": tp_packing_efficiency,
+    "tp_preference_pairs": tp_preference_pairs,
+    "tp_pack_bestfit": tp_pack_bestfit,
+    "tp_context_truncation": tp_context_truncation,
+    "tp_dedup_aware_mixture": tp_dedup_aware_mixture,
+    "tp_final_sample_weights": tp_final_sample_weights,
+}
+
+ORACLES = {
+    "tp_label_balance": TP_BALANCE_ORACLE,
+    "tp_corpus_curation": _curation_oracle(),
+    "tp_incremental_dedup": TP_INCR_ORACLE,
+    "tp_bloom_incremental_dedup": TP_INCR_ORACLE,
+    "tp_ranker_auc": TP_AUC_ORACLE,
+    "tp_sequence_packing": TP_PACK_ORACLE,
+    "tp_training_mix": TP_MIX_ORACLE,
+    "tp_contamination": TP_CONTAM_ORACLE,
+    "tp_shard_shuffle": TP_SHARD_ORACLE,
+    "tp_curriculum_order": TP_CURRICULUM_ORACLE,
+    "tp_dataset_card": TP_CARD_ORACLE,
+    "tp_rag_pipeline": _rag_oracle(),
+    "tp_bpe_pair_counts": TP_BPE_ORACLE,
+    "tp_token_ids": TP_TOKEN_IDS_ORACLE,
+    "tp_doc_chunking": TP_CHUNK_ORACLE,
+    "tp_source_caps": TP_SOURCE_CAPS_ORACLE,
+    "tp_vocab_coverage": TP_VOCAB_COV_ORACLE,
+    "tp_temperature_mix": TP_TEMP_MIX_ORACLE,
+    "tp_span_corruption": TP_SPAN_ORACLE,
+    "tp_detokenize_roundtrip": TP_DETOK_ORACLE,
+    "tp_length_buckets": TP_LENBUCKET_ORACLE,
+    "tp_train_val_split": TP_SPLIT_ORACLE,
+    "tp_tokenizer_fertility": TP_FERTILITY_ORACLE,
+    "tp_dsir_weights": TP_DSIR_ORACLE,
+    "tp_mixture_epochs": TP_EPOCHS_ORACLE,
+    "tp_neyman_allocation": TP_NEYMAN_ORACLE,
+    "tp_sft_format": TP_SFT_ORACLE,
+    "tp_chat_lint": TP_CHAT_LINT_ORACLE,
+    "tp_loss_masking": TP_LOSS_MASK_ORACLE,
+    "tp_annotation_agreement": TP_KAPPA_ORACLE,
+    "tp_bpe_merge_step": _bpe_step_oracle,
+    "tp_packing_efficiency": _tp_packing_eff_oracle,
+    "tp_preference_pairs": TP_PREF_ORACLE,
+    "tp_pack_bestfit": _tp_pack_bestfit_oracle,
+    "tp_context_truncation": TP_TRUNCATION_ORACLE,
+    "tp_dedup_aware_mixture": TP_DEDUP_MIX_ORACLE,
+    "tp_final_sample_weights": TP_FINAL_WEIGHTS_ORACLE,
+}

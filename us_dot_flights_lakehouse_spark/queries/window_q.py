@@ -1,40 +1,15 @@
 """Window / time-series queries (w*): rolling, ranking, forecasting, funnels.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/relational.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+The module owns its catalog entries (``QUERIES``/``ORACLES`` at the end).
+See the package ``__init__`` for the cross-engine determinism contract.
 """
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
-from us_dot_flights_lakehouse_spark.operators.aggregates import (
-    MONEY,
-    conditional_avg,
-    conditional_count,
-    cube_agg,
-    dec_sum,
-    rollup_agg,
-)
-from us_dot_flights_lakehouse_spark.operators.generators import date_range_df
-from us_dot_flights_lakehouse_spark.operators.joins import (
-    asof_join,
-    broadcast_star_join,
-    bucketed_range_join,
-    enrich_join,
-    outer_merge_coalesce,
-    semi_join,
-)
-from us_dot_flights_lakehouse_spark.operators.setops import (
-    except_distinct,
-    intersect_distinct,
-    union_distinct,
-)
-from us_dot_flights_lakehouse_spark.sources.readers import (
-    lookup_scan,
-    read_corpus,
-    read_table,
-)
+from us_dot_flights_lakehouse_spark.operators.aggregates import MONEY, dec_sum
+from us_dot_flights_lakehouse_spark.sources.readers import read_table
 
 
 def w1_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1630,3 +1605,54 @@ SELECT month,
        CAST(cents - yoy AS DOUBLE) / CAST(yoy AS DOUBLE) AS yoy_change
 FROM lagged
 """
+
+
+QUERIES = {
+    "w1_topk_per_group": w1_topk_per_group,
+    "w2_window_suite": w2_window_suite,
+    "w3_time_range_window": w3_time_range_window,
+    "w5_gapfill_resample": w5_gapfill_resample,
+    "w6_forward_fill": w6_forward_fill,
+    "w7_event_funnel": w7_event_funnel,
+    "w8_rolling_anomaly": w8_rolling_anomaly,
+    "w4_scd2_history": w4_scd2_history,
+    "w9_cohort_retention": w9_cohort_retention,
+    "w10_markov_transitions": w10_markov_transitions,
+    "w11_rank_suite": w11_rank_suite,
+    "w12_ewma_smoothing": w12_ewma_smoothing,
+    "w13_activity_bitmap": w13_activity_bitmap,
+    "w14_holt_forecast": w14_holt_forecast,
+    "w17_holt_winters": w17_holt_winters,
+    "w18_anomaly_ensemble": w18_anomaly_ensemble,
+    "w15_changepoint_cusum": w15_changepoint_cusum,
+    "w16_seasonal_decompose": w16_seasonal_decompose,
+    "w19_autocorrelation": w19_autocorrelation,
+    "w20_attribution": w20_attribution,
+    "w21_rolling_quantile": w21_rolling_quantile,
+    "w22_period_over_period": w22_period_over_period,
+}
+
+ORACLES = {
+    "w1_topk_per_group": W1_ORACLE,
+    "w2_window_suite": W2_ORACLE,
+    "w3_time_range_window": W3_ORACLE,
+    "w5_gapfill_resample": W5_ORACLE,
+    "w6_forward_fill": W6_ORACLE,
+    "w7_event_funnel": W7_ORACLE,
+    "w8_rolling_anomaly": W8_ORACLE,
+    "w4_scd2_history": W4_ORACLE,
+    "w9_cohort_retention": W9_ORACLE,
+    "w10_markov_transitions": W10_ORACLE,
+    "w11_rank_suite": W11_ORACLE,
+    "w12_ewma_smoothing": W12_ORACLE,
+    "w13_activity_bitmap": W13_ORACLE,
+    "w14_holt_forecast": W14_ORACLE,
+    "w17_holt_winters": W17_ORACLE,
+    "w18_anomaly_ensemble": W18_ORACLE,
+    "w15_changepoint_cusum": W15_ORACLE,
+    "w16_seasonal_decompose": W16_ORACLE,
+    "w19_autocorrelation": W19_ORACLE,
+    "w20_attribution": W20_ORACLE,
+    "w21_rolling_quantile": W21_ORACLE,
+    "w22_period_over_period": W22_ORACLE,
+}

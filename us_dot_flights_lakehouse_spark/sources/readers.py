@@ -347,28 +347,3 @@ def with_lineage(df: DataFrame, partition_date_col: str | None = None) -> DataFr
     if partition_date_col is not None:
         out = out.withColumn("partition_date", F.to_date(F.col(partition_date_col)))
     return out
-
-
-def read_csv_robust(
-    spark: SparkSession,
-    path: str,
-    schema: str,
-    corrupt_col: str = "_corrupt_record",
-):
-    """Corrupt-tolerant CSV scan: PERMISSIVE mode parses what it can and
-    captures the raw text of every malformed line in ``corrupt_col``
-    instead of failing the 100 TB job on row 3 billion (DROPMALFORMED
-    silently loses data; FAILFAST dies). Returns (valid_df, corrupt_df) —
-    route ``corrupt_df`` to a quarantine sink and gate on its count.
-    """
-    full = (
-        spark.read.schema(f"{schema}, {corrupt_col} string")
-        .option("header", "true")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .csv(path)
-        .cache()
-    )
-    valid = full.where(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    corrupt = full.where(F.col(corrupt_col).isNotNull()).select(corrupt_col)
-    return valid, corrupt
